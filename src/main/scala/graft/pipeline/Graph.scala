@@ -125,9 +125,12 @@ object Graph {
     fromDocs.union(fromLabeled).distinct()
   }
 
-  /** Partitioned graph sink (O29): one parquet dataset per label/type. */
-  def writeGraph(nodesDf: DataFrame, edgesDf: DataFrame, outDir: String): Unit = {
-    nodesDf.write.mode("overwrite").partitionBy("label").parquet(s"$outDir/nodes")
-    edgesDf.write.mode("overwrite").partitionBy("type").parquet(s"$outDir/edges")
+  /** Partitioned graph sink (O29): one parquet dataset per label/type,
+    * written in save `mode` ("append" for incremental deltas).
+    */
+  def writeGraph(nodesDf: DataFrame, edgesDf: DataFrame, outDir: String,
+      mode: String = "overwrite"): Unit = {
+    nodesDf.write.mode(mode).partitionBy("label").parquet(s"$outDir/nodes")
+    edgesDf.write.mode(mode).partitionBy("type").parquet(s"$outDir/edges")
   }
 }

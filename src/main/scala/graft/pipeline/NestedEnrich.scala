@@ -95,6 +95,22 @@ object NestedEnrich {
           r => struct(ConvertNameExpr.convertNameNative(r.getField("name")).as("name"))))
   }
 
+  /** The enriched model's index entries back as [[Classify.labelTriples]]
+    * rows (documentID, main, main_type, midsub, midsub_type, sub,
+    * sub_type), so the graph reads the labels the documents carry
+    * instead of running the classify chain a second time. Works on B2
+    * and B3 alike; an absent midsub/sub object maps back to "" typed
+    * 'term', as labelTriples types an empty one.
+    */
+  def labeledTriples(enriched: DataFrame): DataFrame = {
+    def sub(f: String): Seq[Column] = Seq(
+      coalesce(col(s"t.$f.term"), lit("")).as(f),
+      coalesce(col(s"t.$f.type"), lit("term")).as(s"${f}_type"))
+    enriched.select(col("documentID"), explode(col("indexing")).as("t"))
+      .select(Seq(col("documentID"), col("t.term").as("main"),
+        col("t.type").as("main_type")) ++ sub("midsub") ++ sub("sub"): _*)
+  }
+
   /** B2 -> B3: mint URIs (generate_uri.py:29-67) — always for
     * authors/recipients/location, for index entities only when
     * type != 'term'; midsub/sub recursed. Term nodes stay uri-less

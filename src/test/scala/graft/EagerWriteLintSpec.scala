@@ -86,8 +86,7 @@ class EagerWriteLintSpec extends AnyFunSuite {
     // Rows below entered with the round-18 widening to all of graft/:
     "StreamRuns.scala:stageAsFiles" -> 1, // registered: the stagedGeneration write itself (swept at generation time)
     "StreamRuns.scala:stageAsPartitionedTree" -> 1, // registered: same
-    "Engine.scala:run" -> 1, // reference batch pipeline's sink by contract (O6 JSON sink)
-    "Engine.scala:runIncremental" -> 3, // incremental pipeline's graph/doc sinks (stream scope)
+    "Engine.scala:writeBatch" -> 1, // run/runIncremental's shared batch body: documents JSON sink by contract (O6); its graph goes through Graph.writeGraph
     "Verify.scala:run" -> 1, // driver-contract result dump (plan is the query under test)
     "GraftTsv.scala:write" -> 2, // DSv2 sink-by-contract writer entry point
     "GraftTsv.scala:writePartitioned" -> 2) // DSv2 key-grouped writer entry point

@@ -62,13 +62,16 @@ class XmlPipelineSpec extends AnyFunSuite {
     // note: "new york" is a KNOWN entity (location) -> pruned from the
     // classifier input; as a midsub it must STILL label 'term' (§2.3-4)
 
-  private lazy val docModel = {
+  /** `xml` written to a fresh temp file; returns its path. */
+  private def fixtureFile(xml: String): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-xml").toString
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/fixture.xml"), fixtureXml)
-    XmlDocs.toDocModel(XmlDocs.read(spark, s"$dir/fixture.xml"))
-      .cache()
+      java.nio.file.Paths.get(s"$dir/fixture.xml"), xml)
+    s"$dir/fixture.xml"
   }
+
+  private lazy val docModel =
+    XmlDocs.toDocModel(XmlDocs.read(spark, fixtureFile(fixtureXml))).cache()
 
   private lazy val b3 = NestedEnrich.addUris(NestedEnrich.enrich(docModel, mock))
 
@@ -130,12 +133,13 @@ class XmlPipelineSpec extends AnyFunSuite {
   }
 
   private lazy val flatDocs = XmlDocs.toFlatDocs(docModel)
-  private lazy val labeled = {
-    val triples = XmlDocs.toTriples(docModel)
-    val known = NestedEnrich.knownEntities(docModel)
+  private def labeledOf(docs: org.apache.spark.sql.DataFrame) = {
+    val triples = XmlDocs.toTriples(docs)
+    val known = NestedEnrich.knownEntities(docs)
     val api = Classify.apiMap(Classify.allTerms(triples), known, mock)
     Classify.labelTriples(triples, known, api)
   }
+  private lazy val labeled = labeledOf(docModel)
 
   test("graph: Term nodes for every midsub/sub; no uri on Terms") {
     val nodes = Graph.nodes(flatDocs, labeled)
@@ -171,5 +175,52 @@ class XmlPipelineSpec extends AnyFunSuite {
     val e1 = Graph.edges(flatDocs, labeled)
     val eTwice = Graph.edges(flatDocs.union(flatDocs), labeled.union(labeled))
     assert(e1.exceptAll(eTwice).isEmpty && eTwice.exceptAll(e1).isEmpty)
+  }
+
+  /** Two authors; the second is also an index main term. Known entities
+    * come from every author and recipient, so that term is a person.
+    */
+  private val twoAuthorsXml =
+    """<root>
+      |<document>
+      |  <documentID>d3</documentID>
+      |  <documentTitle>Letter Three</documentTitle>
+      |  <authors><author>Hamilton, Alexander</author><author>Jefferson, Thomas</author></authors>
+      |  <recipients><recipient>Madison, James</recipient></recipients>
+      |  <indexing>
+      |    <indexTerm><main>Jefferson, Thomas</main><midsub>letters</midsub></indexTerm>
+      |    <indexTerm><main>taxes</main><midsub>Virginia</midsub><sub>reports</sub></indexTerm>
+      |  </indexing>
+      |</document>
+      |</root>
+      |""".stripMargin
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Row] = df.collect().toSet
+
+  test("engine graph equals the graph of the nested labels, as sets") {
+    val engine = new Engine(spark, mock)
+    for (dm <- Seq(docModel,
+        XmlDocs.toDocModel(XmlDocs.read(spark, fixtureFile(twoAuthorsXml))))) {
+      val (nodes, edges) = engine.graph(dm)
+      val (flat, lab) = (XmlDocs.toFlatDocs(dm), labeledOf(dm))
+      assert(rowSet(nodes) == rowSet(Graph.nodes(flat, lab)))
+      assert(rowSet(edges) == rowSet(Graph.edges(flat, lab)))
+    }
+  }
+
+  test("graph labels an index term as the documents JSON does") {
+    val out = java.nio.file.Files.createTempDirectory("graft-xml-out").toString
+    new Engine(spark, mock).run(fixtureFile(twoAuthorsXml), out)
+    val inJson = spark.read.json(s"$out/documents")
+      .select(explode(col("indexing")).as("t"))
+      .filter(col("t.term") === "Thomas Jefferson")
+      .select("t.type", "t.uri").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(inJson.size == 1 && inJson.head._1 == "person" && inJson.head._2 != null)
+    val inGraph = spark.read.parquet(s"$out/nodes")
+      .filter(col("key") === "Thomas Jefferson")
+      .select("label", "uri").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(inGraph == Seq(("Person", inJson.head._2)))
   }
 }
