@@ -1,35 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // See Verify: SPJ planning flag belongs in session defaults, not
-      // inside a query builder.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // Static conf (must be set before the first session): the
-      // JVM-global generated-class cache (CodeGenerator.cache) holds
-      // 100 entries by default, and a 369-query inventory churns
-      // ~1000+ distinct codegen units per run — every query paid
-      // janino compilation again even when the identical plan had
-      // just executed (warm-up, canaries, repeated family shapes all
-      // evicted each other). Sized to hold the whole inventory's
-      // generated classes; keyed on generated SOURCE, so this is
-      // scale-neutral (the same 2000 entries serve 100 TB — entry
-      // count follows query-shape count, not data). Parameterised for
-      // harness A/Bs; 24g forked heap dwarfs the cache's footprint.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      // See Verify: anchored warehouse, never cwd-relative.
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkConfs.local(SparkConfs.cpus, "graft-bench")
     // Warm the JVM/codegen/scan paths so the first timed query does not
     // absorb session startup. Guarded: an unreadable warmup table must
     // not kill the run before the report line — the per-query loop
@@ -46,11 +19,12 @@ object Bench {
     // invocation sets no filter and benches the full inventory.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
+    val timed = SparkEntry.queries.filter { case (n, _) => only.isEmpty || only(n) }
     // Force the memoized staged chains (pipeline classify chain, shingle
     // index, embedding norms/buckets/IVF, bucketed-table CTAS) by running
     // each family's first-toucher once before timing. Without this,
     // whichever family member happens to run first absorbs the whole
-    // staging cost and per-query numbers migrate between rounds as map
+    // staging cost and per-query numbers migrate between runs as map
     // order shifts; the one-time cost is reported as its own
     // staging_sec field instead.
     val stagers = Seq("pipeline_node_counts", "dedup_minhash_sig",
@@ -65,9 +39,8 @@ object Bench {
       "text_lm_score", "scan_dsv2_skipping", "agg_kmv_sketch",
       "sim_graph_route", "sample_importance_dsir",
       "dedup_span_exact", "sim_bitext_margin",
-      // Round-10 staged families: chunk fingerprints, line keys, phash
-      // signatures then the CC labels keyed on them (pairs BEFORE
-      // clusters), and LPA's sorted edge copy.
+      // phash pairs BEFORE clusters: the CC labels are keyed on the
+      // pair signatures.
       "dedup_chunk_exact", "text_line_dedup",
       "multimodal_phash_pairs", "multimodal_phash_clusters",
       "graph_label_propagation",
@@ -85,59 +58,30 @@ object Bench {
       // probe query should time the probe join, not the index
       // read-back, same attribution as every other staged family.
       "str_fuzzy_match")
-      .filter(n => SparkEntry.queries.contains(n) && (only.isEmpty || only(n)))
-    // Whole-stage-codegen warm-up for the one expensive UNSTAGED query:
-    // pipeline_nested_enrich's first-touch codegen compilation produced
-    // record spikes in r14 (35.8 s) and r16 (16.2 s), each costing an
-    // A/B to discharge. Running the same plan shape at sf0.001 compiles
-    // the identical generated classes (no data-derived literals in the
-    // plan) for pennies, so the timed sf0.1 run stops paying the JIT
-    // lottery. Reported as its own warmup_sec — NOT inside staging_sec,
-    // whose hit-only read-back is the band-table mode probe and must
-    // stay comparable to the r13-r16 records.
+      .filter(timed.contains)
+    // Codegen warm-up: the timed query set runs once at sf0.001 (the
+    // sibling of the bench's sf dir) before timing. Same plan shapes
+    // with no data-derived literals, so the same generated classes
+    // compile, at ~1/100 of the data; the timed pass then measures
+    // computation, not first-touch whole-stage codegen and JIT, which
+    // a CPU-starved box inflates 10-40x on a single query. Reported in
+    // warmup_sec, outside every per-query time and outside staging_sec,
+    // whose hit-only read-back is the mode probe.
     var warmupSec = 0.0
-    // Round 19: the warm-up generalizes from one query to the WHOLE
-    // inventory. Every record from r13 on carried concentrated spikes
-    // 10-40x a query's same-code median (r17: six queries 11-43x,
-    // r18: text_vocab_coverage_curve 65 s vs 2.6 s median), all on
-    // JIT/codegen-heavy shapes, none reproducible in any same-code
-    // A/B — the cost class is FIRST-TOUCH whole-stage-codegen + JIT
-    // compilation, which a CPU-starved box inflates hardest. The r17
-    // verdict prescribed extending the nested_enrich-style warm-up to
-    // offending shapes; one query per round is whack-a-mole, so run
-    // the ENTIRE query inventory once at sf0.001 before the timed
-    // loop: same plan shapes, so the same generated classes compile
-    // (for pennies — the corpus there is ~100x smaller), and the
-    // timed sf0.1 pass measures computation, not the compiler
-    // (optimization guide §1.4). Reported in warmup_sec, OUTSIDE
-    // staging_sec (the mode probe) and outside every per-query time;
-    // per-query methodology (build + count at $SPARK_GRAFT_SF_DIR)
-    // is unchanged. SPARK_GRAFT_WARMUP=0 restores the r18 behaviour
-    // (one nested_enrich warm-up) for A/B comparisons.
-    val fullWarmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
-    if (only.isEmpty || only("pipeline_nested_enrich")) {
+    val tiny = new java.io.File(new java.io.File(sfDir).getAbsoluteFile.getParentFile, "sf0.001")
+    if (tiny.isDirectory) {
       val w0 = System.nanoTime()
-      try {
-        val tiny = "/root/testdata/sf0.001"
-        if (new java.io.File(tiny).isDirectory) {
-          val warmQs =
-            if (fullWarmup && only.isEmpty) SparkEntry.queries.toSeq
-            else SparkEntry.queries.filter(_._1 == "pipeline_nested_enrich").toSeq
-          var failed = 0
-          warmQs.foreach { case (n, fn) =>
-            try fn(spark, tiny).count()
-            catch { case t: Throwable =>
-              failed += 1
-              System.err.println(s"[bench] warm-up '$n' failed: ${t.getMessage}")
-            }
-          }
-          warmupSec = r3((System.nanoTime() - w0) / 1e9)
-          System.err.println(
-            s"[bench] codegen warm-up (${warmQs.size} queries, $failed failed): ${warmupSec}s")
+      var failed = 0
+      timed.foreach { case (n, fn) =>
+        try fn(spark, tiny.getPath).count()
+        catch { case t: Throwable =>
+          failed += 1
+          System.err.println(s"[bench] warm-up '$n' failed: ${t.getMessage}")
         }
-      } catch { case t: Throwable =>
-        System.err.println(s"[bench] warm-up failed: ${t.getMessage}")
       }
+      warmupSec = r3((System.nanoTime() - w0) / 1e9)
+      System.err.println(
+        s"[bench] codegen warm-up (${timed.size} queries, $failed failed): ${warmupSec}s")
     }
     // Snapshot the pipeline disk-cache counters AFTER the warm-up: its
     // sf0.001 staged builds are deliberate warm-up cost, and counting
@@ -147,11 +91,11 @@ object Bench {
     // Stream staged-input generation is STAGING by nature: on a cold
     // scratch mount the shared immutable trees (events/documents
     // copies, two-phase feeds, CDC base) are materialized by Spark
-    // write jobs that used to land inside whichever stream query
-    // touched each tree first (the r16 record spikes). Generate them
-    // here — reported as prestage_sec, outside both staging_sec (the
-    // mode probe) and every per-query time; on a warm mount each
-    // artifact costs a fingerprint check + mtime touch.
+    // write jobs that would otherwise land inside whichever stream
+    // query touches each tree first. Generate them here — reported as
+    // prestage_sec, outside both staging_sec (the mode probe) and every
+    // per-query time; on a warm mount each artifact costs a
+    // fingerprint check + mtime touch.
     var prestageSec = 0.0
     if (only.isEmpty || only.exists(_.startsWith("stream_"))) {
       val w0 = System.nanoTime()
@@ -185,22 +129,18 @@ object Bench {
       }
     }
     val staging = r3((System.nanoTime() - s0) / 1e9)
-    // Calibration canaries (round 18): the staging probe classifies the
+    // Calibration canaries: the staging probe classifies the
     // ENVIRONMENT (same bytes re-read every run) but not QUERY-SIDE
-    // throughput — the r17 record was fast-probe yet 2.2x the round's
-    // median total, with six spikes 11-43x that cost a worktree A/B to
-    // discharge. Fixed work re-run at the BEGIN and END of the timed
+    // throughput. Fixed work re-run at the BEGIN and END of the timed
     // loop makes every record self-classifying: one JIT/codegen-heavy
-    // shape (win_kaplan_meier — the repeat record offender, spiked in
-    // both the r16 and r17 records; running it here also pre-compiles
-    // its plan shape, the same cure nested_enrich got in r17), one
-    // shuffle-heavy shape (join_sort_merge — a two-sided shuffle SMJ),
-    // one stream (stream_dsv2_ingest — micro-batch + state machinery).
-    // begin vs the committed table's begin = query-side inflation of
-    // THIS run; end vs begin = drift DURING the run. Untimed: canary
-    // seconds are reported in their own field, and the begin pass
-    // doubles as codegen warm-up for those three shapes (their in-loop
-    // times drop accordingly — disclosed in BENCH_RATIO.md).
+    // shape (win_kaplan_meier), one shuffle-heavy shape
+    // (join_sort_merge — a two-sided shuffle SMJ), one stream
+    // (stream_dsv2_ingest — micro-batch + state machinery). begin vs
+    // the committed table's begin = query-side inflation of THIS run;
+    // end vs begin = drift DURING the run. Untimed: canary seconds are
+    // reported in their own field, and the begin pass doubles as
+    // codegen warm-up for those three shapes (their in-loop times drop
+    // accordingly — disclosed in BENCH_RATIO.md).
     val canaryNames = Seq("win_kaplan_meier", "join_sort_merge",
       "stream_dsv2_ingest")
     def runCanaries(): Seq[(String, Double)] =
@@ -219,9 +159,8 @@ object Bench {
     if (canaryBegin.nonEmpty)
       System.err.println(s"[bench] canaries begin: ${canaryJson(canaryBegin)}")
     // A throwing query is excluded from the timing map and reported in a
-    // `failed` list instead: recording it as ~0 s (round 8's catch-all)
-    // poisoned the headline — 53 broken queries "ran" in milliseconds and
-    // the total read as a 4.4x win it was not.
+    // `failed` list instead: recorded as ~0 s, broken queries would
+    // "run" in milliseconds and the total would read as a win.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     // Per-query exchange counts from the (unexecuted, AQE-initial)
     // physical plan — annotation-grade telemetry for ratio_table.py's
@@ -239,9 +178,7 @@ object Bench {
         Some(t.split('\n').count(l =>
           l.contains("Exchange") && !l.contains("ReusedExchange")))
       } catch { case _: Throwable => None }
-    val results = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .flatMap { case (name, fn) =>
+    val results = timed.flatMap { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, sfDir)
@@ -286,12 +223,11 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // ONE schema for `failed` in both outputs — {"n":N,"names":[...]} —
     // so a collector parsing sidecar and stdout under one shape never
-    // breaks (the r9 advisor flagged the array-vs-object split). The
-    // sidecar carries the complete name list; the stdout copy is
-    // BUDGETED like the queries map: the collector keeps only the last
-    // 2000 chars, and an unbudgeted list (53 failures ≈ 1.2k chars in
-    // the round-8 scenario) would push the line head — the headline
-    // metric — off the tail exactly when many queries fail.
+    // breaks. The sidecar carries the complete name list; the stdout
+    // copy is BUDGETED like the queries map: the collector keeps only
+    // the last 2000 chars, and an unbudgeted list (50 failures ≈ 1.2k
+    // chars) would push the line head — the headline metric — off the
+    // tail exactly when many queries fail.
     def failedObj(names: Seq[String], totalN: Int): String = {
       val extra = totalN - names.size
       val items = names.map("\"" + _ + "\"") ++
@@ -300,9 +236,9 @@ object Bench {
     }
     val failedJson = failedObj(failed.toSeq, failed.size)
     val failedStdout = failedObj(failed.take(8).toSeq, failed.size)
-    // Cross-JVM stage-cache telemetry: staging_sec was ~33% of r9 wall;
-    // without hit/miss counts the driver cannot tell a cold round (real
-    // recompute) from a warm one (parquet read-back) or a regression.
+    // Cross-JVM stage-cache telemetry: without hit/miss counts a record
+    // cannot tell a cold run (real recompute) from a warm one (parquet
+    // read-back) or a regression.
     // Delta from the post-warm-up snapshot: the probe's hit-only
     // criterion judges the sf-dir cache this run benched, not the
     // warm-up's sf0.001 artifacts.
@@ -318,18 +254,18 @@ object Bench {
     val (sgHits, sgMisses) = graft.streaming.StreamRuns.stagedGenStats
     val streamStaging = s"""{"hits":$sgHits,"misses":${sgMisses - preGenMisses},"prestaged":$preGenMisses}"""
     // The downstream report collector keeps only the LAST 2000 characters
-    // of stdout (observed across five rounds: every full 113-query line
-    // was head-truncated and unparseable). Budget the line to fit: emit
+    // of stdout, so a full per-query line arrives head-truncated and
+    // unparseable. Budget the line to fit: emit
     // the slowest queries individually, fold the remainder into one
     // "others" rollup, and write the complete per-query map to a sidecar
     // file for humans.
     val sorted = results.toSeq.sortBy { case (n, s) => (-s, n) }
     val full = sorted.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // Absolute path (the JVM's cwd is not guaranteed to be the repo),
+    // Anchored path (the JVM's cwd is not guaranteed to be the repo),
     // and never let a sidecar IO failure suppress the report line.
     try {
-      val sidecar = java.nio.file.Paths.get("/root/repo/target/bench_full.json")
+      val sidecar = java.nio.file.Paths.get(s"${SparkConfs.targetDir}/bench_full.json")
       java.nio.file.Files.createDirectories(sidecar.getParent)
       val stagingMap = stagerSecs
         .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")

@@ -76,6 +76,15 @@ final class Engine(
     * sink (MERGE-keyed dedup happens inside each batch; cross-batch
     * idempotency = downstream dropDuplicates on read, the documented
     * lakehouse-MERGE stand-in — SURVEY §1.3).
+    *
+    * Known entities are harvested per micro-batch, from that batch's
+    * documents alone. Labels equal `run`'s over the same files only
+    * when every author, recipient or place mention of an entity
+    * arrives in the same micro-batch as its index-term mentions: an
+    * index term that names an author of a document in another batch
+    * is classified on its own (e.g. "Knox, Henry" stays a `term`
+    * where `run` gives the person "Henry Knox"). Appended batches are
+    * never relabelled later.
     */
   def runIncremental(xmlDir: String, outDir: String, checkpoint: String,
       filesPerTrigger: Int = 1): StreamingQuery =
@@ -132,11 +141,7 @@ object RunPipeline {
     require(args.length >= 2,
       "usage: graft.RunPipeline <xmlDirOrFile> <outDir> [--incremental]")
     val (in, outDir) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = SparkConfs.builder("graft-pipeline").getOrCreate()
     val path =
       if (new java.io.File(in).isDirectory) s"$in/*.xml" else in
     val engine = new Engine(spark)

@@ -1,46 +1,57 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dev tool (round-18 optimization): batch [[Explain]] — for each named
-  * query, time build/plan/exec1/exec2 in ONE shared JVM (so later
-  * queries see a warm JIT, like a full bench run does) and write the
-  * formatted physical plan to `plans/<round>/<name>_<suffix>.txt` for
-  * the plan-claims record. Not part of the driver contract.
+/** Dev tool: for each named query, time the phases — plan
+  * construction (the builder fn), analysis+optimization+planning, and
+  * two executions (the first pays codegen and exchange warm-up, the
+  * second is steady state) — in ONE shared JVM, so later queries see a
+  * warm JIT like a full bench run does, and write the formatted
+  * physical plan to `<planDir>/<name>_<suffix>.txt`. This separates
+  * "the data side is slow" from "the plan side is slow".
   *
-  * Usage: sbt "runMain graft.PlanDump <suffix> <name1,name2,...> [sfDir]"
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_STAGERS (optional
-  * comma list run un-timed first), SPARK_GRAFT_PLANDIR (default
-  * /root/repo/plans/r18).
+  * Usage: sbt "runMain graft.PlanDump <planDir> <suffix> <name1,name2,...> <sfDir>"
+  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_STAGERS (optional comma list run
+  * un-timed first, so phase timings measure the named queries, not
+  * shared staging). Exits 1 when any named query fails.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val suffix = args(0)
-    val names = args(1).split(",").filter(_.nonEmpty)
-    val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val planDir = sys.env.getOrElse("SPARK_GRAFT_PLANDIR", "/root/repo/plans/r18")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
+    require(args.length == 4,
+      "usage: graft.PlanDump <planDir> <suffix> <name1,name2,...> <sfDir>")
+    val Array(planDir, suffix, names, dir) = args
+    val spark = SparkConfs.local(SparkConfs.cpus, "graft-plandump")
     sys.env.get("SPARK_GRAFT_STAGERS").foreach(_.split(",").foreach { n =>
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, dir).count()
       System.err.println(s"[plandump] stager $n: ${ms(t0)} ms")
     })
+    val failed = run(spark, dir, planDir, suffix,
+      names.split(",").filter(_.nonEmpty).toSeq, SparkEntry.queries)
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plandump] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  private def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
+
+  /** Time and dump each of `names`; returns the names that failed
+    * (including names missing from `queries`).
+    */
+  def run(
+      spark: SparkSession,
+      dir: String,
+      planDir: String,
+      suffix: String,
+      names: Seq[String],
+      queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(planDir))
-    names.foreach { name =>
+    def dumped(name: String): Boolean =
       try {
         val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, dir)
+        val df = queries(name)(spark, dir)
         val tBuild = ms(t0)
         val t1 = System.nanoTime()
         val plan = df.queryExecution.explainString(
@@ -59,10 +70,11 @@ object PlanDump {
           plan.getBytes("UTF-8"))
         println(s"[plandump] $name rows=$n build=${tBuild}ms plan=${tPlan}ms " +
           s"exec1=${tExec1}ms exec2=${tExec2}ms exchanges=$exch")
+        true
       } catch { case t: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${t.getMessage}")
+        false
       }
-    }
-    spark.stop()
+    names.filterNot(dumped)
   }
 }

@@ -9,28 +9,7 @@ object Verify {
     // Optional trailing query names restrict the dump (dev iteration);
     // the driver's 2-arg invocation always dumps everything.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Session-wide, not per-query: storage-partitioned-join planning
-      // for the V2 connector (join_spj_colocated). Setting it inside a
-      // query builder would leak planner config into every later query
-      // in the session, making plans order-dependent.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // Generated-class cache sized to the inventory (see Bench: the
-      // 100-entry default evicts every query's classes mid-run).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      // Anchored warehouse: the default is cwd-relative, and the
-      // driver's launch directory is not guaranteed writable or stable
-      // across runs (same class of failure as the stage-cache root).
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkConfs.local(SparkConfs.cpus, "graft-verify")
     val queries = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }.toSeq
     val errors = run(spark, sfDir, outDir, queries, SparkEntry.oracleSql)

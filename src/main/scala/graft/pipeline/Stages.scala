@@ -229,30 +229,12 @@ object Staged {
     apply(s, dir, tag) { spillThrough(s, dir, tag)(key)(build) }
 
   /** Cache root: overridable via system property / env for test
-    * isolation; otherwise anchored to the compiled classes' location
-    * (target/scala-N/classes resolves to target/stagecache), NOT the
-    * process cwd — the driver may launch Verify/Bench from any
-    * directory, and a cwd-relative cache would recompute every staged
-    * build per run (or fail outright on an unwritable cwd). Falls back
-    * to cwd only when the code source is unresolvable (e.g. a jar-less
-    * custom loader).
+    * isolation; otherwise `stagecache` under [[graft.SparkConfs.targetDir]].
     */
   private[graft] def cacheRoot: String =
     sys.props.get("graft.stagecache.dir")
       .orElse(sys.env.get("SPARK_GRAFT_STAGECACHE"))
-      .getOrElse {
-        val anchored =
-          try {
-            val loc = new java.io.File(getClass.getProtectionDomain
-              .getCodeSource.getLocation.toURI)
-            // classes dir target/scala-2.13/classes and packaged jar
-            // target/scala-2.13/x.jar both sit two levels under target.
-            Option(loc.getParentFile).flatMap(p => Option(p.getParentFile))
-              .filter(_.getName == "target")
-              .map(t => new java.io.File(t, "stagecache").getAbsolutePath)
-          } catch { case _: Throwable => None }
-        anchored.getOrElse(new java.io.File("target/stagecache").getAbsolutePath)
-      }
+      .getOrElse(s"${graft.SparkConfs.targetDir}/stagecache")
 
   /** Fingerprint of the INPUT DATA under `dir`: every file's path, byte
     * size, and mtime, folded in sorted order. The plan semanticHash alone

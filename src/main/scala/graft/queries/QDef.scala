@@ -96,10 +96,10 @@ object QDef {
 
   /** Scratch space for queries that must materialize an intermediate
     * (JSON round-trips, partitioned sinks, streaming checkpoints).
-    * Kept inside the repo target dir per the environment contract.
+    * Kept under [[graft.SparkConfs.targetDir]].
     */
   def scratch(sub: String): String = {
-    val p = s"/root/repo/target/scratch/$sub"
+    val p = s"${graft.SparkConfs.targetDir}/scratch/$sub"
     new java.io.File(p).getParentFile.mkdirs()
     p
   }

@@ -505,25 +505,21 @@ object Similarity {
   // Tuned against sim_recall_graph_route: degree 3 / beam 4 / 3 hops
   // scored 33% recall@3; these settings score well above it.
   private val NswDeg = 4
-  private val NswBeam = envInt("SPARK_GRAFT_NSW_BEAM", 12)
-  private val NswHops = envInt("SPARK_GRAFT_NSW_HOPS", 5)
+  private val NswBeam = 12
+  private val NswHops = 5
   // NN-descent index build: seed edges per node (deterministic
   // md5-derived "random" links) and refinement rounds. Tuned against
   // sim_recall_graph_route — the audit, not intuition, owns these.
-  // Env-overridable for tuning sweeps; BOTH the Spark build and the
-  // DuckDB oracle replay derive from these constants, so an override
-  // keeps the two engines in lockstep.
-  private def envInt(k: String, d: Int): Int =
-    sys.env.get(k).flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0).getOrElse(d)
+  // BOTH the Spark build and the DuckDB oracle replay derive from these
+  // constants, which keeps the two engines in lockstep.
   // Swept 2026-08: (seeds, rounds) ∈ {6,8,12}×{2,3,4} → (12, 3) routes
   // best (mean recall@3 0.867 at sf0.001, 0.533 at sf0.01 — ABOVE the
   // round-7 exact-KNN build's 0.70-0.80): more rounds of pure-KNN
   // convergence HURT navigability (tight clusters strand the beam), so
   // the diverse random seeds carry their weight and 4 rounds scored
   // worse than 3.
-  private val NswSeeds = envInt("SPARK_GRAFT_NSW_SEEDS", 12)
-  private val NswBuildRounds = envInt("SPARK_GRAFT_NSW_ROUNDS", 3)
+  private val NswSeeds = 12
+  private val NswBuildRounds = 3
   // HNSW upper layers (Malkov & Yashunin): node v lives on layer l iff
   // md5("nswl:"+v) % NswLayerMods(l-1) == 0 — the deterministic stand-in
   // for HNSW's exponential level sampling, with 1/8 decay per layer so
@@ -534,11 +530,11 @@ object Similarity {
   // id-hash SCAN (n/4 exact dots per query, the last linear-in-corpus
   // stage this operator had). Per-query routing cost is now
   // O(hops·beam·deg) at every level; hop counts should grow with
-  // log(n) on a bigger corpus (env knobs below).
+  // log(n) on a bigger corpus.
   private val NswLayerMods: Seq[Long] = Seq(8L, 64L)
-  private val NswLayerSeeds = envInt("SPARK_GRAFT_NSW_LAYER_SEEDS", 4)
-  private val NswLayerRounds = envInt("SPARK_GRAFT_NSW_LAYER_ROUNDS", 2)
-  private val NswDescentHops = envInt("SPARK_GRAFT_NSW_DESCENT_HOPS", 3)
+  private val NswLayerSeeds = 4
+  private val NswLayerRounds = 2
+  private val NswDescentHops = 3
   // Descent width: E rank-spread entry members at the top layer (a
   // single entry strands queries whose true neighborhood sits across
   // the crude deg-4 member graph from it — the single-entry sweep
@@ -552,9 +548,9 @@ object Similarity {
   // the strongest lever (it widths the L0 seed set); descent hops
   // BEYOND 3 lowered recall (greedy convergence herds the beam into
   // one cluster).
-  private val NswEntryPoints = envInt("SPARK_GRAFT_NSW_ENTRIES", 4)
-  private val NswDescentKeepTop = envInt("SPARK_GRAFT_NSW_KEEP_TOP", 2)
-  private val NswDescentKeep = envInt("SPARK_GRAFT_NSW_KEEP", 12)
+  private val NswEntryPoints = 4
+  private val NswDescentKeepTop = 2
+  private val NswDescentKeep = 12
 
   /** Per-(vector, subspace) training points for the PQ codebook: the
     * 64-dim vector split into [[MSub]] contiguous 16-dim subvectors,

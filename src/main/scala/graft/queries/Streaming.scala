@@ -758,8 +758,7 @@ object Streaming {
         val ds = src.select(col("user_id"), col("value")).as[(Long, Double)]
         val out = ds.groupByKey(_._1).transformWithState(
           new UserStatsProcessor, TimeMode.None(), OutputMode.Append())
-        val snaps = StreamRuns.runToMemory(s, out.toDF(), "append", "tws",
-          forceRocksDb = true)
+        val snaps = StreamRuns.runToMemory(s, out.toDF(), "append", "tws")
         val w = Window.partitionBy("user_id").orderBy(col("n").desc)
         snaps.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
           .select(col("user_id"), col("n"), col("cents"))
@@ -783,8 +782,7 @@ object Streaming {
           .as[(Long, String, Double)]
         val out = ds.groupByKey(_._1).transformWithState(
           new TypeStatsProcessor, TimeMode.None(), OutputMode.Append())
-        val snaps = StreamRuns.runToMemory(s, out.toDF(), "append", "mapstate",
-          forceRocksDb = true)
+        val snaps = StreamRuns.runToMemory(s, out.toDF(), "append", "mapstate")
         val w = Window.partitionBy("user_id", "event_type")
           .orderBy(col("n").desc)
         snaps.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
@@ -824,8 +822,7 @@ object Streaming {
         // Phases staged as FILES; only the 1-row bounds aggregate ever
         // reaches the driver.
         val (p1, p2) = timerPhases(s, dir)
-        StreamRuns.twoPhaseFilesToMemory(s, "timer", dir, p1, p2,
-            forceRocksDb = true) { df =>
+        StreamRuns.twoPhaseFilesToMemory(s, "timer", dir, p1, p2) { df =>
           df.withWatermark("ts", "0 seconds")
             .as[EvV]
             .groupByKey(_.user_id)

@@ -26,7 +26,7 @@ object StreamRuns {
     sys.env.get("SPARK_GRAFT_STREAM_SCRATCH").getOrElse {
       val shm = new java.io.File("/dev/shm")
       if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-stream-scratch"
-      else "/root/repo/target/scratch/stream"
+      else s"${graft.SparkConfs.targetDir}/scratch/stream"
     }
 
   /** Exposed for the prune-grace spec (StreamRunsPruneSpec), which
@@ -89,20 +89,13 @@ object StreamRuns {
     * value is sized to executor count; state partitioning is fixed at
     * first checkpoint, which is why it must be set before start().
     */
-  val StreamShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      // Tolerant parse: a malformed value must not kill this object's
-      // initializer — that would fail every streaming query with an
-      // unrelated-looking NoClassDefFoundError.
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(8)
+  val StreamShufflePartitions: Int = 8
 
-  /** RocksDB state store + changelog checkpointing unless
-    * SPARK_GRAFT_STATE_STORE=hdfs opts back into the default provider.
-    * The HDFS-backed store serializes every partition's full state map
-    * into a new delta file per micro-batch (fsync each); RocksDB with
-    * changelog checkpointing appends only the changed keys and defers
+  /** RocksDB state store + changelog checkpointing (transformWithState
+    * supports no other provider). The HDFS-backed store serializes every
+    * partition's full state map into a new delta file per micro-batch
+    * (fsync each); RocksDB with changelog checkpointing appends only the
+    * changed keys and defers
     * snapshot upload to a background maintenance pass — at bounded
     * per-partition state that turns checkpoint IO from the dominant
     * stream cost into noise, and on a real cluster it is also the
@@ -121,27 +114,13 @@ object StreamRuns {
     "spark.sql.streaming.minBatchesToRetain" -> "2",
     "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s")
 
-  private val StateStoreConf: Map[String, String] =
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("hdfs")) Map.empty
-    else RocksDbConf
-
   /** Run `body` with the session's shuffle-partition count pinned to
-    * [[StreamShufflePartitions]] and the state-store provider set to
-    * [[StateStoreConf]] (restored after). Streaming queries capture the
-    * conf at start(), so this scopes the overrides to the stream
-    * without perturbing batch queries.
+    * [[StreamShufflePartitions]] and the RocksDB state store (restored
+    * after). Streaming queries capture the conf at start(), so this
+    * scopes the overrides to the stream without perturbing batch
+    * queries.
     */
   def withStreamPartitions[T](spark: SparkSession)(body: => T): T =
-    graft.SparkConfs.withConfs(spark,
-      StateStoreConf + ("spark.sql.shuffle.partitions" -> StreamShufflePartitions.toString))(body)
-
-  /** Like [[withStreamPartitions]] but ALWAYS RocksDB: transformWithState
-    * supports no other provider, so the SPARK_GRAFT_STATE_STORE=hdfs
-    * comparison knob must not reach those queries — under it they would
-    * fail with an unrelated-looking invalid-provider error while every
-    * other stream passes.
-    */
-  def withStreamPartitionsRocksDb[T](spark: SparkSession)(body: => T): T =
     graft.SparkConfs.withConfs(spark,
       RocksDbConf + ("spark.sql.shuffle.partitions" -> StreamShufflePartitions.toString))(body)
 
@@ -152,39 +131,27 @@ object StreamRuns {
       spark: SparkSession,
       stream: DataFrame,
       mode: String,
-      tag: String,
-      forceRocksDb: Boolean = false): DataFrame = {
-    def run(): DataFrame = runToMemoryBody(spark, stream, mode, tag)
-    if (forceRocksDb) withStreamPartitionsRocksDb(spark)(run())
-    else withStreamPartitions(spark)(run())
-  }
-
-  private def runToMemoryBody(
-      spark: SparkSession,
-      stream: DataFrame,
-      mode: String,
-      tag: String): DataFrame = {
+      tag: String): DataFrame = withStreamPartitions(spark) {
     val qn = s"${tag}_${UUID.randomUUID().toString.take(8).replace("-", "")}"
-    val q = stream.writeStream
+    stream.writeStream
       .format("memory")
       .queryName(qn)
       .outputMode(mode)
       .option("checkpointLocation", fresh(s"$tag-ckpt"))
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     spark.table(qn)
   }
 
   /** Shared two-phase MemoryStream replay harness (watermark-semantics
     * queries): feed `p1`, drain (processAllAvailable includes the
     * no-data batch a watermark advance schedules), feed `p2`, drain,
-    * stop; returns the append-mode memory sink. `forceRocksDb` is for
-    * transformWithState streams, which support no other provider.
+    * stop; returns the append-mode memory sink.
     */
   def twoPhaseToMemory[T <: Product : org.apache.spark.sql.Encoder](
       spark: SparkSession, tag: String, p1: Seq[T], p2: Seq[T],
-      forceRocksDb: Boolean = false, mode: String = "append")(
+      mode: String = "append")(
       build: DataFrame => DataFrame): DataFrame = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
@@ -200,8 +167,7 @@ object StreamRuns {
       q.processAllAvailable()
       q.stop()
     }
-    if (forceRocksDb) withStreamPartitionsRocksDb(spark)(run())
-    else withStreamPartitions(spark)(run())
+    withStreamPartitions(spark)(run())
     spark.table(qn)
   }
 
@@ -252,7 +218,7 @@ object StreamRuns {
   def twoPhaseFilesToMemory(
       spark: SparkSession, tag: String, dir: String,
       p1: DataFrame, p2: DataFrame,
-      forceRocksDb: Boolean = false, mode: String = "append")(
+      mode: String = "append")(
       build: DataFrame => DataFrame): DataFrame = {
     // Both phases are staged ONCE per (plan, input-data) generation in
     // the shared immutable tree ([[stageAsFiles]] — cross-JVM, so the
@@ -276,8 +242,7 @@ object StreamRuns {
       q.processAllAvailable()
       q.stop()
     }
-    if (forceRocksDb) withStreamPartitionsRocksDb(spark)(run())
-    else withStreamPartitions(spark)(run())
+    withStreamPartitions(spark)(run())
     spark.table(qn)
   }
 

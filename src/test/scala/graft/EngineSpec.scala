@@ -115,4 +115,36 @@ class EngineSpec extends AnyFunSuite {
       assert(rowSet(spark.read.parquet(s"$out/$g").distinct()) ==
         rowSet(spark.read.parquet(s"$batchOut/$g")), g)
   }
+
+  test("incremental labels come from each micro-batch's own known entities") {
+    // Two one-document files: the first names Henry Knox as its
+    // author, the second only as an index term.
+    def doc(id: String, author: String, terms: String*): String =
+      s"""<root><document><documentID>$id</documentID>
+         |<documentTitle>$id</documentTitle>
+         |<authors><author>$author</author></authors>
+         |<indexing>${terms.map(t => s"<indexTerm><main>$t</main></indexTerm>").mkString}</indexing>
+         |</document></root>
+         |""".stripMargin
+    val in = StreamRuns.fresh("engine-inc-labels-in")
+    Files.writeString(Path.of(in, "a.xml"), doc("knox-author", "Knox, Henry"))
+    Files.writeString(Path.of(in, "b.xml"), doc("knox-term", "Adams, John", "Knox, Henry"))
+    // No classifier labels: a term's label comes from the known entities alone.
+    val engine = new Engine(spark, new graft.pipeline.Classify.MockClassifier(Map.empty))
+    def termsOf(out: String): Seq[(String, String)] =
+      spark.read.json(s"$out/documents").filter(col("documentID") === "knox-term")
+        .select(explode(col("indexing")).as("t")).select("t.term", "t.type")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+
+    val batchOut = StreamRuns.fresh("engine-inc-labels-batch")
+    engine.run(in, batchOut)
+    assert(termsOf(batchOut) == Seq(("Henry Knox", "person")))
+
+    val incOut = StreamRuns.fresh("engine-inc-labels-out")
+    val q = engine.runIncremental(in, incOut, s"$incOut/_ckpt", filesPerTrigger = 1)
+    q.awaitTermination()
+    q.exception.foreach(e => throw e)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    assert(termsOf(incOut) == Seq(("Knox, Henry", "term")))
+  }
 }

@@ -5,9 +5,9 @@ Usage: python3 tools/bench_compare.py A1.json[,A2.json...] B1.json[,B2.json...]
 
 Side A and side B are each one or more bench_full.json files; the tool
 prints per-query medians for both sides, the delta, and the totals,
-sorted by |delta| descending. Used for the r19 warm-up A/B (alternating
-SPARK_GRAFT_WARMUP=0/1 runs) and any other harness-level A/B where
-same-JVM interleaving is impossible.
+sorted by |delta| descending. For harness-level A/Bs where same-JVM
+interleaving is impossible: alternate full graft.Bench runs of the two
+revisions and copy each run's target/bench_full.json aside.
 """
 import json
 import statistics
