@@ -162,29 +162,19 @@ object Bench {
     // `failed` list instead: recorded as ~0 s, broken queries would
     // "run" in milliseconds and the total would read as a win.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Per-query exchange counts from the (unexecuted, AQE-initial)
-    // physical plan — annotation-grade telemetry for ratio_table.py's
-    // floor arithmetic (each exchange is ~0.1 s of fixed stage-launch
-    // latency in local mode). Counted OUTSIDE the timed window on the
-    // same DataFrame the query returned; string-based so no private
-    // planner API is touched. ReusedExchange is excluded (it launches
-    // no extra stage); full runs only — a subset A/B should not pay
-    // the extra planning pass.
+    // Per-query exchange counts (PlanDump.countExchanges) —
+    // annotation-grade telemetry for ratio_table.py's floor arithmetic.
+    // Counted OUTSIDE the timed window on the same DataFrame the query
+    // returned; full runs only — a subset A/B should not pay the extra
+    // planning pass.
     val exchanges = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    def countExchanges(df: org.apache.spark.sql.DataFrame): Option[Int] =
-      try {
-        val t = df.queryExecution.executedPlan.treeString(
-          verbose = false, addSuffix = false)
-        Some(t.split('\n').count(l =>
-          l.contains("Exchange") && !l.contains("ReusedExchange")))
-      } catch { case _: Throwable => None }
     val results = timed.flatMap { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, sfDir)
         df.count()
         val sec = r3((System.nanoTime() - t0) / 1e9)
-        if (only.isEmpty) countExchanges(df).foreach(exchanges(name) = _)
+        if (only.isEmpty) PlanDump.countExchanges(df).foreach(exchanges(name) = _)
         Some(name -> sec)
       }
       catch { case t: Throwable =>

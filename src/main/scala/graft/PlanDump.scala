@@ -35,6 +35,21 @@ object PlanDump {
     }
   }
 
+  /** Exchange nodes in `df`'s physical plan (AQE-initial until `df`
+    * itself executes), from the one-line-per-node tree string — each
+    * exchange is ~0.1 s of fixed stage-launch latency in local mode.
+    * ReusedExchange is excluded (it launches no extra stage). The
+    * FormattedMode explain is not used: it lists every node twice, in
+    * the tree and again as a detail header. None if planning fails.
+    */
+  def countExchanges(df: DataFrame): Option[Int] =
+    try {
+      val t = df.queryExecution.executedPlan.treeString(
+        verbose = false, addSuffix = false)
+      Some(t.split('\n').count(l =>
+        l.contains("Exchange") && !l.contains("ReusedExchange")))
+    } catch { case _: Throwable => None }
+
   private def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
 
   /** Time and dump each of `names`; returns the names that failed
@@ -63,13 +78,11 @@ object PlanDump {
         val t3 = System.nanoTime()
         df.count()
         val tExec2 = ms(t3)
-        val exch = plan.split('\n').count(l =>
-          l.contains("Exchange") && !l.contains("ReusedExchange"))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$planDir/${name}_$suffix.txt"),
           plan.getBytes("UTF-8"))
         println(s"[plandump] $name rows=$n build=${tBuild}ms plan=${tPlan}ms " +
-          s"exec1=${tExec1}ms exec2=${tExec2}ms exchanges=$exch")
+          s"exec1=${tExec1}ms exec2=${tExec2}ms exchanges=${countExchanges(df).getOrElse(-1)}")
         true
       } catch { case t: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${t.getMessage}")

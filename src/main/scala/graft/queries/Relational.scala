@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.pipeline.Staged.GenerationStore.deleteRecursively
 
 /** Relational operator inventory: scans/sinks, filters, joins, aggregates,
   * windows, sorts, set ops (SURVEY.md §2.2). Every query is a declarative
@@ -26,11 +27,7 @@ object Relational {
   private def manifestVersions(s: SparkSession, dir: String): String = {
     val out = scratch(s"manifest_tt_${new java.io.File(dir).getName}")
     graft.pipeline.Staged(s, dir, "manifest_tt") {
-      def rmr(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr)
-        f.delete(); ()
-      }
-      rmr(new java.io.File(out))
+      deleteRecursively(new java.io.File(out))
       new java.io.File(s"$out/data").mkdirs()
       val base = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -48,7 +45,7 @@ object Relational {
             n
           }.sorted.toSeq
       }
-      (0 until 3).foreach(k => rmr(new java.io.File(s"$out/commit$k")))
+      (0 until 3).foreach(k => deleteRecursively(new java.io.File(s"$out/commit$k")))
       (1 to 3).foreach { v =>
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$out/manifest_v$v.txt"),
@@ -76,24 +73,14 @@ object Relational {
       // session (the in-memory catalog forgets external state), which
       // made this the one stager that never amortized across bench
       // rounds. A sidecar fingerprint of the input parquet files
-      // (path+size+mtime, the Stages.inputFingerprint recipe) next to
-      // each table location decides: unchanged inputs + surviving
-      // files → re-REGISTER the existing bucketed layout as an
-      // external table (CREATE ... CLUSTERED BY ... LOCATION — bucket
-      // ids live in the file names, so registration restores the
-      // co-located SMJ plan exactly); anything else → full rebuild.
-      def inputFp(): String = {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def walk(f: java.io.File): Unit =
-          if (f.isDirectory)
-            Option(f.listFiles()).foreach(_.sortBy(_.getName).foreach(walk))
-          else md.update(
-            s"${f.getAbsolutePath}\t${f.length}\t${f.lastModified}\n"
-              .getBytes("UTF-8"))
-        Seq("lineitem", "orders").foreach(n => walk(new java.io.File(s"$dir/$n.parquet")))
-        md.digest().take(8).map(b => f"$b%02x").mkString
-      }
-      val fp = inputFp()
+      // (Staged.inputFingerprint of each) next to each table location
+      // decides: unchanged inputs + surviving files → re-REGISTER the
+      // existing bucketed layout as an external table (CREATE ...
+      // CLUSTERED BY ... LOCATION — bucket ids live in the file names,
+      // so registration restores the co-located SMJ plan exactly);
+      // anything else → full rebuild.
+      val fp = Seq("lineitem", "orders")
+        .map(n => graft.pipeline.Staged.inputFingerprint(s"$dir/$n.parquet")).mkString("-")
       def markerOf(tbl: String) = new java.io.File(whDir, s"$tbl.fp")
       // The input fingerprint alone is not enough: if part files under
       // the table location are deleted while the .fp sidecar survives,
@@ -127,11 +114,7 @@ object Relational {
       } else {
         Seq(lt, ot).foreach { tbl =>
           s.sql(s"DROP TABLE IF EXISTS $tbl")
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete(); ()
-          }
-          if (loc(tbl).exists()) rm(loc(tbl))
+          deleteRecursively(loc(tbl))
           markerOf(tbl).delete()
         }
         li.write.mode("overwrite").format("parquet")
@@ -761,13 +744,9 @@ object Relational {
       (s, dir) => {
         val out = scratch(s"manifest_sink_${new java.io.File(dir).getName}")
         graft.pipeline.Staged(s, dir, "manifest_sink") {
-          def rmr(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr)
-            f.delete(); ()
-          }
           // The scratch directory outlives the JVM while the Staged
           // marker does not — clear first or stale orphans accumulate.
-          rmr(new java.io.File(out))
+          deleteRecursively(new java.io.File(out))
           val committed = t(s, dir, "documents")
             .filter(col("doc_id") % 2 === 0)
             .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -784,7 +763,7 @@ object Relational {
             .filter(_.getName.endsWith(".parquet")).head
           java.nio.file.Files.move(orphanSrc.toPath,
             java.nio.file.Paths.get(s"$out/data/part-orphan-uncommitted.parquet"))
-          rmr(new java.io.File(s"$out/tmp_orphan"))
+          deleteRecursively(new java.io.File(s"$out/tmp_orphan"))
           // The commit point: the manifest write is the LAST operation.
           java.nio.file.Files.write(
             java.nio.file.Paths.get(s"$out/manifest.txt"),
@@ -868,11 +847,7 @@ object Relational {
       (s, dir) => {
         val out = scratch(s"manifest_gc_${new java.io.File(dir).getName}")
         graft.pipeline.Staged(s, dir, "manifest_gc") {
-          def rmr(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr)
-            f.delete(); ()
-          }
-          rmr(new java.io.File(out))
+          deleteRecursively(new java.io.File(out))
           val even = t(s, dir, "documents")
             .filter(col("doc_id") % 2 === 0)
             .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))

@@ -5,6 +5,8 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.pipeline.Staged.GenerationStore
+
 /** Harness for running a Structured Streaming query to completion inside
   * a batch-shaped `SparkEntry.queries` entry: file/Memory sources with
   * AvailableNow-style triggers, memory or parquet sinks, fresh
@@ -40,14 +42,11 @@ object StreamRuns {
     * deletes them — across enough rounds that fills the mount (RAM,
     * on /dev/shm). Anything older than 2 h is from a finished run
     * (these streams live for seconds); deletion is best-effort and
-    * never fails the caller. MEMOIZED staged sources
-    * ([[stageAsFiles]], `staged-` prefix) get a much longer grace
-    * period: their paths live in [[stageCache]] for the JVM's
-    * lifetime, so a 2 h sweep in a >2 h session (or from a concurrent
-    * JVM sharing the scratch mount) would delete a directory the
-    * cache keeps serving — every later file-source stream would read
-    * nothing. Reuse also touches their mtime, so a live staged source
-    * never ages out while any JVM keeps using it.
+    * never fails the caller. Staged generations ([[stageAsFiles]],
+    * `staged-` prefix, their `.tmp-` writes included) outlive runs and
+    * get the generation store's 24 h idle grace instead
+    * (`Staged.GenerationStore`); reuse touches their mtime, so a live
+    * staged source never ages out while any JVM keeps using it.
     */
   def fresh(tag: String): String = {
     sweepAged()
@@ -57,10 +56,6 @@ object StreamRuns {
   }
 
   private val AgedMs = 2L * 3600 * 1000
-  // Staged sources outlive individual runs (JVM-lifetime memo +
-  // cross-JVM sharing of the mount): only reclaim ones no JVM has
-  // touched for a day — sessions run hours, not days.
-  private val StagedAgedMs = 24L * 3600 * 1000
   private val StagedPrefix = "staged-"
   private val lastSweep = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -70,13 +65,9 @@ object StreamRuns {
     // stream run and the directory listing should not become a cost.
     val prev = lastSweep.get()
     if (now - prev < 600000L || !lastSweep.compareAndSet(prev, now)) return
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
     try Option(new java.io.File(ScratchRoot).listFiles()).foreach(_.foreach { d =>
-      val limit = if (d.getName.startsWith(StagedPrefix)) StagedAgedMs else AgedMs
-      if (d.isDirectory && now - d.lastModified() > limit) rm(d)
+      val limit = if (d.getName.startsWith(StagedPrefix)) GenerationStore.GraceMs else AgedMs
+      if (d.isDirectory && now - d.lastModified() > limit) GenerationStore.deleteRecursively(d)
     })
     catch { case _: Throwable => () } // best-effort only
   }
@@ -273,20 +264,16 @@ object StreamRuns {
     ()
   }
 
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // Generation-level telemetry, mirroring Staged.diskCacheStats: a
-  // MISS means a Spark write job generated a staged tree in this JVM;
-  // the bench reports these so a record where stream staging was cold
-  // (generation paid inside staging_sec) is distinguishable from a
-  // warm one — and so the staging mode probe can refuse to classify a
-  // run whose staging time includes stream-input recompute.
-  private val genHits = new java.util.concurrent.atomic.AtomicLong(0)
-  private val genMisses = new java.util.concurrent.atomic.AtomicLong(0)
+  // Generation-level telemetry: a MISS means a Spark write job
+  // generated a staged tree in this JVM. The bench reports these so a
+  // record where stream staging was cold (generation paid inside
+  // staging_sec) is distinguishable from a warm one — and so the
+  // staging mode probe can refuse to classify a run whose staging time
+  // includes stream-input recompute.
+  private val genStore = new GenerationStore
 
   /** (hits, misses) over [[stagedGeneration]] lookups in this JVM. */
-  def stagedGenStats: (Long, Long) = (genHits.get(), genMisses.get())
+  def stagedGenStats: (Long, Long) = genStore.stats
 
   // Append-only log of every generation KEY requested, hit or miss —
   // telemetry only (never read by staging itself). Lets the prestage
@@ -310,23 +297,18 @@ object StreamRuns {
 
   /** Materialize a stable single-schema copy of a table as a multi-file
     * parquet directory a file-source stream can discover incrementally.
-    * Memoized per (tag, files, plan, input-data) within the JVM — six
+    * Staged once per (tag, files, plan, input-data) generation — six
     * streaming queries over the same events table stage one copy, not
-    * six — AND addressed by a DETERMINISTIC generation name on the
-    * shared scratch mount, so a FRESH JVM (the driver's bench after
-    * the builder's runs) discovers the previous JVM's copy instead of
-    * re-running the staging write job. The generation key mirrors
-    * Staged.spillThrough: the canonicalized-plan fingerprint
-    * (semanticHash is NOT JVM-stable for file relations) plus the
-    * input-data fingerprint (an in-place testdata regeneration leaves
-    * every plan identical).
-    *
-    * `dir` is the query's input scale directory, fingerprinted into
-    * the key. Entries are VALIDATED on every hit (the directory's
-    * _SUCCESS must still exist — a sweep from a concurrent JVM, or any
-    * external cleanup, invalidates the memo and the copy is re-staged)
-    * and the directory's mtime is touched on reuse so [[sweepAged]]'s
-    * staged-dir grace period measures idle time, not age.
+    * six — under a DETERMINISTIC generation name on the shared scratch
+    * mount, so a FRESH JVM (a bench after a Verify or test run)
+    * discovers the previous JVM's copy instead of re-running the
+    * staging write job. The key is Staged.spillThrough's: the
+    * canonicalized-plan fingerprint (semanticHash is NOT JVM-stable for
+    * file relations) plus the fingerprint of `dir`, the query's input
+    * scale directory (an in-place testdata regeneration leaves every
+    * plan identical). Every lookup re-checks the generation on disk, so
+    * a tree swept by a concurrent JVM or any external cleanup is
+    * re-staged, never served dead.
     */
   def stageAsFiles(df: DataFrame, tag: String, files: Int,
       dir: String): String =
@@ -371,76 +353,18 @@ object StreamRuns {
     ()
   }
 
+  /** Commit (or reuse) the `staged-<tag>-<kind>-<planFp>-<dataFp>`
+    * generation of `df` through the generation store shared with
+    * Staged.spillThrough.
+    */
   private def stagedGeneration(df: DataFrame, tag: String, kind: String,
       dir: String)(write: String => Unit): String = {
     val planFp = graft.pipeline.Staged.planFingerprint(
       df.queryExecution.logical)
     val dataFp = graft.pipeline.Staged.inputFingerprint(dir)
     val gen = s"$StagedPrefix$tag-$kind-$planFp-$dataFp"
-    val genPath = s"$ScratchRoot/$gen"
-    val key = gen
-    genTouches.add(key)
-    def live(d: String): Boolean = new java.io.File(d, "_SUCCESS").exists()
-    var out = stageCache.get(key)
-    if (out != null && live(out)) genHits.incrementAndGet()
-    else stageCache.synchronized {
-      out = stageCache.get(key)
-      if (out != null && live(out)) genHits.incrementAndGet()
-      else {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-        }
-        val chosen =
-          if (live(genPath)) { genHits.incrementAndGet(); genPath }
-          else {
-            genMisses.incrementAndGet()
-            // Write to a fresh private dir, then atomically rename to
-            // the generation name: concurrent JVMs sharing the mount
-            // either win the rename or adopt the winner's copy — a
-            // direct write to the shared name could be listed
-            // half-finished by another JVM's stream.
-            val tmp = fresh(s"$StagedPrefix$tag-src")
-            write(tmp)
-            val moved =
-              try {
-                java.nio.file.Files.move(
-                  java.nio.file.Paths.get(tmp),
-                  java.nio.file.Paths.get(genPath),
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                true
-              } catch { case _: java.io.IOException => false }
-            // Prune stale generations of this tag (old plan or data
-            // fingerprints) once a new one is committed — same
-            // new-first-then-prune order as Staged.spillThrough — but
-            // only ones IDLE past the STAGED-dir grace (24 h, the same
-            // one [[sweepAged]] gives `staged-` dirs): staged trees
-            // outlive individual runs — another SCALE DIR's tree
-            // (dataFp differs by construction) or a concurrent JVM's
-            // still-streamed source is a sibling by name, and runs are
-            // routinely spaced more than the 2 h scratch grace apart,
-            // so pruning at the shorter grace re-opens the r16
-            // cross-scale-dir destruction for any >2 h-spaced session.
-            // Reuse touches the dir's mtime, so an in-use generation
-            // never looks idle; this prune is never more aggressive
-            // than the sweep.
-            val pfx = s"$StagedPrefix$tag-$kind-"
-            val now = System.currentTimeMillis()
-            Option(new java.io.File(ScratchRoot).listFiles())
-              .getOrElse(Array.empty)
-              .filter(f => f.getName.startsWith(pfx) && f.getName != gen &&
-                now - f.lastModified() > StagedAgedMs)
-              .foreach(del)
-            if (moved) genPath
-            else if (live(genPath)) { del(new java.io.File(tmp)); genPath }
-            // Rename refused and nobody else committed: serve our
-            // private copy (non-shared, still correct).
-            else tmp
-          }
-        stageCache.put(key, chosen)
-        out = chosen
-      }
-    }
-    new java.io.File(out).setLastModified(System.currentTimeMillis())
-    out
+    genTouches.add(gen)
+    genStore.generation(new java.io.File(ScratchRoot), gen,
+      s"$StagedPrefix$tag-$kind-")(write)
   }
 }

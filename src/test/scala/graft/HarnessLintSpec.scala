@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    paths under it derive from `SparkConfs.targetDir`;
   *  - the environment is read only by literal name, and only the
   *    [[Kept]] names. A new knob must be a constant unless two callers
-  *    need different values, and then it is added here in review.
+  *    need different values, and then it is added here in review;
+  *  - only `Stages.scala` (the write-once generation store) holds the
+  *    `"_SUCCESS"` liveness literal or a 24 h millisecond constant, so
+  *    a second commit-and-prune path cannot grow back beside it.
   *
   * Comment and scaladoc lines are skipped.
   */
@@ -57,6 +60,26 @@ class HarnessLintSpec extends AnyFunSuite {
     (perLine.flatMap(_._1), perLine.flatMap(_._2).toSet)
   }
 
+  private val SuccessRe = "\"_SUCCESS\"".r
+  /** 24 h in milliseconds: `24L * 3600 * 1000`, `24 * 60 * 60 * 1000`,
+    * `Duration.ofHours(24)`, `ofDays(1)`, `HOURS.toMillis(24)`.
+    */
+  private val DayMsRe =
+    """\b24L?\s*\*\s*(?:3600L?|60L?\s*\*\s*60L?)\s*\*\s*1000L?\b|\bofHours\(\s*24L?\s*\)|\bofDays\(\s*1L?\s*\)|\btoMillis\(\s*24L?\s*\)""".r
+
+  /** Generation-store violations in one file's text (comments skipped). */
+  private[graft] def storeScan(baseName: String, content: String): Seq[String] =
+    if (baseName == "Stages.scala") Nil
+    else content.split("\n", -1).toSeq.zipWithIndex.flatMap { case (l, i) =>
+      val t = l.trim
+      if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) Nil
+      else {
+        val at = s"$baseName:${i + 1}"
+        (if (SuccessRe.findFirstIn(l).nonEmpty) Seq(s"$at: _SUCCESS probe outside Stages") else Nil) ++
+          (if (DayMsRe.findFirstIn(l).nonEmpty) Seq(s"$at: 24 h grace outside Stages") else Nil)
+      }
+    }
+
   private def scalaFilesUnder(dir: java.io.File): Seq[java.io.File] =
     Option(dir.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
       .flatMap { f =>
@@ -94,5 +117,29 @@ class HarnessLintSpec extends AnyFunSuite {
       "Evil.scala:6: environment read without a literal name"))
     assert(names == Set("SPARK_GRAFT_NEW_KNOB", "SPARK_GRAFT_CPUS"))
     assert(scan("SparkConfs.scala", "  SparkSession.builder().appName(app)")._1.isEmpty)
+  }
+
+  test("main code: one generation store holds the _SUCCESS probe and the 24 h grace") {
+    val bad = scalaFilesUnder(new java.io.File(Root)).flatMap { f =>
+      storeScan(f.getName, new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    }
+    assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
+  }
+
+  test("planted generation-store violations are caught outside Stages.scala only") {
+    val planted =
+      """object Evil {
+        |  // new java.io.File(d, "_SUCCESS") in a comment is fine
+        |  def live(d: java.io.File) = new java.io.File(d, "_SUCCESS").exists()
+        |  private val Grace = 24L * 3600 * 1000
+        |  private val Grace2 = java.time.Duration.ofHours(24).toMillis
+        |  private val Sweep = 2L * 3600 * 1000
+        |  val cut = raw - raw % 86400000L
+        |}""".stripMargin
+    assert(storeScan("Evil.scala", planted) == Seq(
+      "Evil.scala:3: _SUCCESS probe outside Stages",
+      "Evil.scala:4: 24 h grace outside Stages",
+      "Evil.scala:5: 24 h grace outside Stages"))
+    assert(storeScan("Stages.scala", planted).isEmpty)
   }
 }

@@ -110,4 +110,27 @@ class StagedFlavorStabilitySpec extends AnyFunSuite {
           "and the stagecache grows without bound")
     }
   }
+
+  // `Stages` is eight Staged.disk artifacts, not a second cache: its
+  // frames are the very objects the staged memo serves under the pl_*
+  // tags, and a repeated call rebuilds nothing.
+  test("Stages frames are the Staged memo entries of their pl_* tags") {
+    import graft.pipeline.{Staged, Stages}
+    val st = Stages(spark, sf)
+    assert(st.docs eq Staged(spark, sf, "pl_docs")(sys.error("must not rebuild")))
+    assert(st.labeled eq Staged(spark, sf, "pl_labeled")(sys.error("must not rebuild")))
+    assert(st.nodes eq Staged(spark, sf, "pl_nodes")(sys.error("must not rebuild")))
+  }
+
+  test("a second Stages call in the same session rebuilds nothing") {
+    import graft.pipeline.{Staged, Stages}
+    val a = Stages(spark, sf)
+    val disk0 = Staged.diskCacheStats
+    val b = Stages(spark, sf)
+    a.productIterator.zip(b.productIterator).foreach { case (x, y) =>
+      assert(x.asInstanceOf[AnyRef] eq y.asInstanceOf[AnyRef])
+    }
+    assert(Staged.diskCacheStats === disk0,
+      "a memoized Stages call must not even probe the disk cache")
+  }
 }
