@@ -150,11 +150,6 @@ object Staged {
     * path change — changes the hash and invalidates the entry
     * automatically (stale generations are simply never read again).
     *
-    * ONLY for stages whose entire value is their DataFrame content.
-    * Marker-style stagers (gtsv layout writers returning `range(1)`)
-    * must keep using [[apply]]: caching the marker would skip the side
-    * effect a fresh target directory needs re-run.
-    *
     * The parquet roundtrip relaxes nullability and may widen nothing
     * else — callers relying on exact nullable flags should stay on
     * [[apply]].
@@ -224,18 +219,25 @@ object Staged {
     * spark.sql.debug.maxToStringFields (25) with "... N more fields",
     * so two staged builds differing only in truncated fields would
     * COLLIDE and serve a stale artifact as a false disk hit — and the
-    * fingerprint would silently depend on that debug config. Known
-    * blind spot: LocalRelation row DATA is not rendered
-    * — a staged build keyed solely by in-memory literal ROWS (none
-    * today; constants live in expressions, which do render) would need
-    * its values folded into the tag.
+    * fingerprint would silently depend on that debug config. The tree
+    * rendering omits LocalRelation row data (`Seq(…).toDF` renders
+    * only its attributes), so every LocalRelation's rows are folded in
+    * after it; a plan without in-memory rows hashes exactly its
+    * rendering.
     */
   private[graft] def planFingerprint(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(stableLambdas(plan.canonicalized
+    val canon = plan.canonicalized
+    md.update(stableLambdas(canon
       .treeString(verbose = false, addSuffix = false,
         maxFields = Int.MaxValue, printOperatorId = false))
       .getBytes("UTF-8"))
+    canon.collectWithSubqueries { case l: LocalRelation => l }.foreach { l =>
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(l.schema)
+      l.data.foreach(r => md.update(s"\n${toRow(r)}".getBytes("UTF-8")))
+    }
     val b = md.digest()
     (math.abs(java.nio.ByteBuffer.wrap(b, 0, 8).getLong) & 0x7fffffff).toString
   }
@@ -358,19 +360,56 @@ object Staged {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
           CheckpointRef(l.rdd.id, l.output)
       }))
-    val sfName = new java.io.File(dir).getName
     // The "$tag-" prefix cannot cross tags: tags contain no '-', and a
     // tag that prefixes another is always followed by '_' there.
-    val path = diskStore.generation(new java.io.File(s"$cacheRoot/$sfName"),
-      s"$tag-$h-${inputFingerprint(dir)}", s"$tag-") { tmp => build.write.parquet(tmp) }
-    s.read.parquet(path)
+    s.read.parquet(generation(diskStore, scaleRoot(dir), s"$tag-", h, dir) { tmp =>
+      build.write.parquet(tmp)
+    })
   }
 
-  /** The write-once generation store behind both cross-JVM caches:
-    * [[spillThrough]]'s `<stagecache>/<sf>/<tag>-<planFp>-<dataFp>` and
-    * `StreamRuns`' `<scratch>/staged-<tag>-<kind>-<planFp>-<dataFp>`
-    * stream inputs. A generation's name is a pure function of what it
-    * holds, so a fresh JVM finds the previous JVM's copy by name alone.
+  /** The stage-cache directory of one scale dir: `<cacheRoot>/<sf>`. */
+  private def scaleRoot(dir: String): java.io.File =
+    new java.io.File(s"$cacheRoot/${new java.io.File(dir).getName}")
+
+  /** Commit (or reuse) `root/<prefix><planFp>-<dataFp>` through
+    * `store`, `dataFp` being [[inputFingerprint]] of `dir` — the one
+    * naming rule of every cross-JVM generation (prefixes: `<tag>-`,
+    * layouts `<tag>-<kind>-`, stream inputs `staged-<tag>-<kind>-`).
+    */
+  private[graft] def generation(store: GenerationStore, root: java.io.File,
+      prefix: String, planFp: String, dir: String)(write: String => Unit): String =
+    store.generation(root, s"$prefix$planFp-${inputFingerprint(dir)}", prefix)(write)
+
+  /** The path of a staged file LAYOUT (a GraftTsv file set, a
+    * partitioned tree, a manifest chain, raw files), committed as the
+    * stage-cache generation `<tag>-<kind>-<planFps>-<dataFp>`. The key
+    * is the plan fingerprints of the exact `frames` handed to the
+    * writes, `kind` for writer settings those plans lack (file counts,
+    * partition columns; change it with the writer code) and the input
+    * data. `write(tmp)` fills the store's temp sibling, which gets a
+    * `_SUCCESS` if the writer left none. Layouts are read-only once
+    * committed and must not embed their own path; tags share
+    * [[spillThrough]]'s namespace and prune-prefix rule.
+    */
+  def layout(dir: String, tag: String, kind: String, frames: Seq[DataFrame])(
+      write: String => Unit): String = {
+    val planFp = frames.map(f => planFingerprint(f.queryExecution.logical)).mkString("_")
+    generation(diskStore, scaleRoot(dir), s"$tag-$kind-", planFp, dir) { tmp =>
+      write(tmp)
+      val done = new java.io.File(tmp, "_SUCCESS")
+      done.getParentFile.mkdirs()
+      done.createNewFile()
+      ()
+    }
+  }
+
+  /** The write-once generation store behind every cross-JVM cache:
+    * [[spillThrough]]'s `<stagecache>/<sf>/<tag>-<planFp>-<dataFp>`,
+    * [[layout]]'s `<stagecache>/<sf>/<tag>-<kind>-<planFps>-<dataFp>`
+    * and `StreamRuns`' `<scratch>/staged-<tag>-<kind>-<planFp>-<dataFp>`
+    * stream inputs, all named by [[generation]]. A generation's name is
+    * a pure function of what it holds, so a fresh JVM finds the
+    * previous JVM's copy by name alone.
     *
     *  - A generation is live iff its `_SUCCESS` exists; nothing else is
     *    trusted, so a half-written or externally swept directory is

@@ -152,13 +152,19 @@ object Analytics {
       pagerankEdges(s, dir).select(col("src").as("node_id")).distinct()
     }
 
+  /** The pagerank edges clustered by dst, persisted in session: every
+    * label-propagation round joins labels to it on dst.
+    */
+  private def lpaEdgesByDst(s: SparkSession, dir: String): DataFrame =
+    graft.pipeline.Staged(s, dir, "lpa_edges_bydst") {
+      pagerankEdges(s, dir).select(col("src"), col("dst"))
+        .repartition(col("dst")).sortWithinPartitions("dst")
+    }
+
   private def lpaLabels3(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.Staged.disk(s, dir, "lpa_labels3") {
       val ew = pagerankEdges(s, dir)
-      val ewd = graft.pipeline.Staged(s, dir, "lpa_edges_bydst") {
-        ew.select(col("src"), col("dst"))
-          .repartition(col("dst")).sortWithinPartitions("dst")
-      }
+      val ewd = lpaEdgesByDst(s, dir)
       var labels = ew.select(col("src").as("node_id")).distinct()
         .withColumn("lbl", col("node_id"))
       for (_ <- 1 to 3) {
@@ -1036,10 +1042,7 @@ object Analytics {
         // seed as the cross-JVM artifact key.
         val la = graft.pipeline.Staged.diskKeyed(s, dir, "lpa_semisync3")(
           ew.select(col("src"), col("dst"))) {
-          val ewd = graft.pipeline.Staged(s, dir, "lpa_edges_bydst") {
-            ew.select(col("src"), col("dst"))
-              .repartition(col("dst")).sortWithinPartitions("dst")
-          }
+          val ewd = lpaEdgesByDst(s, dir)
           val supp = col("node_id") >= 1000000L
           var labels = ew.select(col("src").as("node_id")).distinct()
             .withColumn("lbl", col("node_id"))

@@ -20,11 +20,22 @@ object Curation {
   private val toksSql =
     """string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')"""
 
+  /** The per-doc bigram explode, disk-staged — shared by the LM score
+    * table and PMI.
+    */
+  private def lmBigrams(
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    graft.pipeline.Staged.disk(s, dir, "lm_bigrams") {
+      t(s, dir, "documents")
+        .withColumn("tks", Text.tokens(Text.normTerm(col("text"))))
+        .select(col("doc_id"), explode(Text.shingles(col("tks"), 2)).as("bg"))
+    }
+
   /** Per-doc bigram-LM fluency scores — (doc_id, n_bigrams, score_ppm),
     * unordered; text_lm_score is this plus an ORDER BY, and
     * text_perplexity_buckets stratifies on it. See text_lm_score's
     * Scaladoc for the exact-integer design; the bigram explode is
-    * disk-staged under "lm_bigrams" and shared with PMI.
+    * [[lmBigrams]], shared with PMI.
     */
   private def lmScorePerDoc(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
@@ -33,11 +44,7 @@ object Curation {
     // it, and each run re-ran the two corpus aggregates (bigram
     // counts, per-doc sums) over the staged bigrams.
     graft.pipeline.Staged.disk(s, dir, "lm_scores") {
-      val bgs = graft.pipeline.Staged.disk(s, dir, "lm_bigrams") {
-        t(s, dir, "documents")
-          .withColumn("tks", Text.tokens(Text.normTerm(col("text"))))
-          .select(col("doc_id"), explode(Text.shingles(col("tks"), 2)).as("bg"))
-      }
+      val bgs = lmBigrams(s, dir)
       val cnt = bgs.groupBy("bg").agg(count(lit(1)).as("c2"))
       val ctx = cnt
         .groupBy(substring_index(col("bg"), " ", 1).as("w1"))
@@ -497,11 +504,7 @@ object Curation {
       // and the unigram/total tables are broadcast — one corpus
       // shuffle total, the linear plan this keeps at 100 TB.
       (s, dir) => {
-        val bgs = graft.pipeline.Staged.disk(s, dir, "lm_bigrams") {
-          t(s, dir, "documents")
-            .withColumn("tks", Text.tokens(Text.normTerm(col("text"))))
-            .select(col("doc_id"), explode(Text.shingles(col("tks"), 2)).as("bg"))
-        }
+        val bgs = lmBigrams(s, dir)
         // Materialize the vocabulary-sized bigram counts ONCE: four
         // branches (main, c1, c2, tot) reference this subtree, and
         // Spark shares no common subtrees — uncheckpointed, each

@@ -107,14 +107,20 @@ object Dedup {
         col("bb.bsig").as("bsig"))
   }
 
+  /** The corpus's staged band index — the one builder of
+    * "minhash_bands", shared by the whole minhash family.
+    */
+  private def bandIndex(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.pipeline.Staged.disk(s, dir, "minhash_bands") {
+      minhashBands(t(s, dir, "documents"))
+    }
+
   /** LSH candidate pairs: docs sharing any band signature — the join
     * key is (band, bsig), bucket-local, never all-pairs. Shared by the
     * pair query and the cluster query.
     */
   private def candidatePairs(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val b = graft.pipeline.Staged.disk(s, dir, "minhash_bands") {
-      minhashBands(t(s, dir, "documents"))
-    }
+    val b = bandIndex(s, dir)
     b.as("a").join(b.as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -290,9 +296,7 @@ object Dedup {
       // The MinHash+LSH index itself: 16 md5-seeded min-hashes over
       // 3-token shingles, banded 4×4. Rows = docs × 4 bands. Staged:
       // the candidate-pair query self-joins this same index.
-      (s, dir) => graft.pipeline.Staged.disk(s, dir, "minhash_bands") {
-        minhashBands(t(s, dir, "documents"))
-      }.orderBy("doc_id", "band"),
+      (s, dir) => bandIndex(s, dir).orderBy("doc_id", "band"),
       Some(s"""WITH $minhashBandsSql
         SELECT doc_id, band, bsig FROM bands ORDER BY doc_id, band""")),
 
@@ -314,9 +318,7 @@ object Dedup {
       // -1 = novel) and its base-candidate count. Reuses the one
       // staged band index the whole minhash family shares.
       (s, dir) => {
-        val b = graft.pipeline.Staged.disk(s, dir, "minhash_bands") {
-          minhashBands(t(s, dir, "documents"))
-        }
+        val b = bandIndex(s, dir)
         val split = t(s, dir, "documents").select(col("doc_id"),
           (pmod(Text.md5Hash32(
             concat(lit("inc:"), col("doc_id").cast("string"))), lit(5L)) === 0)

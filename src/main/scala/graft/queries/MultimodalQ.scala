@@ -65,6 +65,23 @@ object MultimodalQ {
             ON a.band = b.band AND a.bv = b.bv AND a.media_id < b.media_id)"""
   }
 
+  /** The first 100 documents as raw files `doc_NNNNN.bin` holding each
+    * text's UTF-8 bytes (bounded driver staging, same contract as the
+    * XML corpus generator).
+    */
+  private def binaryFiles(s: SparkSession, dir: String): String = {
+    val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
+      .select(col("doc_id"), col("text"))
+    graft.pipeline.Staged.layout(dir, "binary_files", "bin", Seq(docs)) { out =>
+      new java.io.File(out).mkdirs()
+      docs.collect().foreach { r =>
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(out, f"doc_${r.getLong(0)}%05d.bin"),
+          r.getString(1).getBytes("UTF-8"))
+      }
+    }
+  }
+
   val all: Seq[QDef] = Seq(
 
     QDef("scan_binary_files",
@@ -72,30 +89,12 @@ object MultimodalQ {
       // a directory of opaque files — (path, modificationTime, length,
       // content) per file, which is how images/audio actually enter a
       // multimodal pipeline before becoming the binary COLUMNS the
-      // rest of this family processes. Staged once per session+dir
-      // from the first 100 docs (bounded driver staging, same contract
-      // as the XML corpus generator); the scan extracts the id from
+      // rest of this family processes. Staged as one layout generation
+      // from the first 100 docs; the scan extracts the id from
       // the path and digests the bytes, oracle-checked against the
       // source rows.
       (s, dir) => {
-        val out = scratch(s"binfiles_${new java.io.File(dir).getName}")
-        graft.pipeline.Staged(s, dir, "binary_files") {
-          val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-            .select(col("doc_id"), col("text")).collect()
-          // Clear first: the directory outlives the JVM while the
-          // Staged marker does not — a changed staging set would
-          // otherwise read stale orphans alongside the fresh files.
-          val d = new java.io.File(out)
-          if (d.exists()) d.listFiles().foreach(_.delete())
-          d.mkdirs()
-          docs.foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(out, f"doc_${r.getLong(0)}%05d.bin"),
-              r.getString(1).getBytes("UTF-8"))
-          }
-          s.range(1).toDF("ok") // marker: files staged once per session+dir
-        }
-        s.read.format("binaryFile").load(out)
+        s.read.format("binaryFile").load(binaryFiles(s, dir))
           .select(
             regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1)
               .cast("long").as("media_id"),

@@ -5,7 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.pipeline.Staged
 import graft.pipeline.Staged.GenerationStore.deleteRecursively
+import graft.sources.GraftTsv
 
 /** Relational operator inventory: scans/sinks, filters, joins, aggregates,
   * windows, sorts, set ops (SURVEY.md §2.2). Every query is a declarative
@@ -18,25 +20,24 @@ object Relational {
   import QDef._
 
   /** Three append-only manifest commits over a deterministic md5 doc
-    * split, staged once per (session, dir): `data/` holds all commits'
+    * split, staged as one layout generation: `data/` holds all commits'
     * parquet files (names prefixed c0-/c1-/c2-), `manifest_v{1,2,3}.txt`
-    * are CUMULATIVE file lists (v1 ⊂ v2 ⊂ v3) — the append-only
-    * Iceberg/Delta snapshot chain. Shared by the time-travel and
-    * incremental-consumption reads.
+    * are CUMULATIVE file lists (v1 ⊂ v2 ⊂ v3) of data-relative names —
+    * the append-only Iceberg/Delta snapshot chain. Shared by the
+    * time-travel and incremental-consumption reads.
     */
-  private def manifestVersions(s: SparkSession, dir: String): String = {
-    val out = scratch(s"manifest_tt_${new java.io.File(dir).getName}")
-    graft.pipeline.Staged(s, dir, "manifest_tt") {
-      deleteRecursively(new java.io.File(out))
+  private[graft] def manifestVersions(s: SparkSession, dir: String): String = {
+    val base = t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
+        pmod(graft.functions.Text.md5Hash32(
+          concat(lit("ver:"), col("doc_id").cast("string"))), lit(3L))
+          .as("split"))
+    val commits = (0 until 3).map(k =>
+      base.filter(col("split") === k.toLong).drop("split").repartition(2))
+    Staged.layout(dir, "manifest_tt", "manifest", commits) { out =>
       new java.io.File(s"$out/data").mkdirs()
-      val base = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          pmod(graft.functions.Text.md5Hash32(
-            concat(lit("ver:"), col("doc_id").cast("string"))), lit(3L))
-            .as("split"))
-      val names = (0 until 3).map { k =>
-        base.filter(col("split") === k.toLong).drop("split")
-          .repartition(2).write.mode("overwrite").parquet(s"$out/commit$k")
+      val names = commits.zipWithIndex.map { case (c, k) =>
+        c.write.parquet(s"$out/commit$k")
         new java.io.File(s"$out/commit$k").listFiles()
           .filter(_.getName.endsWith(".parquet")).map { f =>
             val n = s"c$k-${f.getName}"
@@ -45,15 +46,130 @@ object Relational {
             n
           }.sorted.toSeq
       }
-      (0 until 3).foreach(k => deleteRecursively(new java.io.File(s"$out/commit$k")))
+      commits.indices.foreach(k => deleteRecursively(new java.io.File(s"$out/commit$k")))
       (1 to 3).foreach { v =>
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$out/manifest_v$v.txt"),
           names.take(v).flatten.mkString("\n").getBytes("UTF-8"))
       }
-      s.range(1).toDF("ok") // marker: layout staged once per session+dir
     }
-    out
+  }
+
+  /** The documents as 8 GraftTsv files range-partitioned on doc_id. */
+  private[graft] def gtsvFiles(s: SparkSession, dir: String): String = {
+    val docs = t(s, dir, "documents")
+    Staged.layout(dir, "gtsv_files", "8", Seq(docs))(GraftTsv.write(docs, _, 8))
+  }
+
+  /** Two GraftTsv sets key-grouped on lang, 4 files each: `a` holds
+    * every document, `b` the even doc_ids.
+    */
+  private def gtsvSpj(s: SparkSession, dir: String): String = {
+    val docs = t(s, dir, "documents")
+    val even = docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
+    Staged.layout(dir, "gtsv_spj", "4", Seq(docs, even)) { out =>
+      GraftTsv.writePartitioned(docs, s"$out/a", 4)
+      GraftTsv.writePartitioned(even, s"$out/b", 4)
+    }
+  }
+
+  /** The documents as one struct-typed `meta` column beside doc_id. */
+  private def docsNested(s: SparkSession, dir: String): String = {
+    val nested = t(s, dir, "documents")
+      .select(col("doc_id"),
+        struct(col("lang"),
+          struct(col("source").as("name")).as("origin"),
+          col("n_chars"), col("text")).as("meta"))
+    Staged.layout(dir, "docs_nested", "parquet", Seq(nested))(nested.write.parquet(_))
+  }
+
+  /** The events table as a hive tree partitioned on event_type. */
+  private def eventsPartitioned(s: SparkSession, dir: String): String = {
+    val events = t(s, dir, "events")
+    Staged.layout(dir, "events_partitioned", "by-event_type", Seq(events))(
+      events.write.partitionBy("event_type").parquet(_))
+  }
+
+  /** The five-row event_type → category dimension, FILE-backed: DPP
+    * never triggers over a local relation, which folds the selective
+    * Filter into its rows at optimization time.
+    */
+  private def eventDim(s: SparkSession, dir: String): String = {
+    import s.implicits._
+    val dim = Seq(("view", "browse"), ("click", "conv"), ("purchase", "conv"),
+      ("signup", "acct"), ("error", "ops"))
+      .toDF("event_type", "category")
+    Staged.layout(dir, "event_dim", "parquet", Seq(dim))(dim.write.parquet(_))
+  }
+
+  /** The events as `evt|id|user|type|value` text lines. */
+  private def eventsTextlog(s: SparkSession, dir: String): String = {
+    val lines = t(s, dir, "events")
+      .select(concat_ws("|", lit("evt"), col("event_id"),
+        col("user_id"), col("event_type"),
+        money(col("value")).cast("string")).as("value"))
+    Staged.layout(dir, "events_textlog", "text", Seq(lines))(lines.write.text(_))
+  }
+
+  /** A manifest-committed sink: `data/` holds the committed even-id
+    * files plus an ORPHAN parquet file (the odd ids) planted after the
+    * data write, and `manifest.txt` — written LAST, the commit point —
+    * lists only the committed data-relative names.
+    */
+  private[graft] def manifestSink(s: SparkSession, dir: String): String = {
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+    val committed = docs.filter(col("doc_id") % 2 === 0).repartition(2)
+    val orphan = docs.filter(col("doc_id") % 2 === 1).coalesce(1)
+    Staged.layout(dir, "manifest_sink", "manifest", Seq(committed, orphan)) { out =>
+      committed.write.parquet(s"$out/data")
+      val files = new java.io.File(s"$out/data").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
+      // Plant the orphan AFTER the data write: a concurrent
+      // writer's uncommitted file, named like a data file so a
+      // directory listing WOULD pick it up.
+      orphan.write.parquet(s"$out/tmp_orphan")
+      val orphanSrc = new java.io.File(s"$out/tmp_orphan").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(orphanSrc.toPath,
+        java.nio.file.Paths.get(s"$out/data/part-orphan-uncommitted.parquet"))
+      deleteRecursively(new java.io.File(s"$out/tmp_orphan"))
+      // The commit point: the manifest write is the LAST operation.
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$out/manifest.txt"),
+        files.mkString("\n").getBytes("UTF-8"))
+    }
+  }
+
+  /** Two manifest snapshots with retained and orphaned files: v1 lists
+    * two even-id files (f0, f1), v2 one compacted rewrite of the same
+    * rows (f2), and f3 (the odd ids) is a crashed writer's output in
+    * no manifest. Manifests hold data-relative names (`data/f0/…`).
+    */
+  private[graft] def manifestGc(s: SparkSession, dir: String): String = {
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+    val even = docs.filter(col("doc_id") % 2 === 0)
+    val files = Seq(
+      "f0" -> even.filter(col("doc_id") % 4 === 0).coalesce(1),
+      "f1" -> even.filter(col("doc_id") % 4 === 2).coalesce(1),
+      // v2: compaction rewrite — same rows, one file, new manifest.
+      "f2" -> even.coalesce(1),
+      // Crashed writer's uncommitted output: on disk, in no manifest.
+      "f3" -> docs.filter(col("doc_id") % 2 === 1).coalesce(1))
+    Staged.layout(dir, "manifest_gc", "manifest", files.map(_._2)) { out =>
+      files.foreach { case (sub, f) => f.write.parquet(s"$out/data/$sub") }
+      def pq(sub: String): Seq[String] =
+        new java.io.File(s"$out/data/$sub").listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+          .map(f => s"data/$sub/${f.getName}").toSeq.sorted
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$out/manifest_v1.txt"),
+        (pq("f0") ++ pq("f1")).mkString("\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$out/manifest_v2.txt"),
+        pq("f2").mkString("\n").getBytes("UTF-8"))
+    }
   }
 
   /** Bucketed+sorted CTAS of lineitem/orders on the join key, staged
@@ -500,17 +616,10 @@ object Relational {
       // doc_id at write, so this selective read plans 1-2 of 8 files
       // (GraftTsvSourceSpec pins both prunings). Pushed filters stay
       // residual — skipping is an optimization, never correctness.
-      (s, dir) => {
-        val out = scratch(s"gtsv_${new java.io.File(dir).getName}/files")
-        graft.pipeline.Staged(s, dir, "gtsv_files") {
-          graft.sources.GraftTsv.write(t(s, dir, "documents"), out, 8)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
-        s.read.format("graft-tsv").load(out)
-          .filter(col("doc_id") >= 100 && col("doc_id") < 200)
-          .select("doc_id", "lang", "n_chars")
-          .orderBy("doc_id")
-      },
+      (s, dir) => s.read.format("graft-tsv").load(gtsvFiles(s, dir))
+        .filter(col("doc_id") >= 100 && col("doc_id") < 200)
+        .select("doc_id", "lang", "n_chars")
+        .orderBy("doc_id"),
       Some("""SELECT doc_id, lang, n_chars FROM documents
         WHERE doc_id >= 100 AND doc_id < 200 ORDER BY doc_id""")),
 
@@ -523,16 +632,9 @@ object Relational {
       // contract parquet footer aggregates provide; at 100 TB this is
       // the difference between a metadata read and a full scan for the
       // "how big is this table" class of query.
-      (s, dir) => {
-        val out = scratch(s"gtsv_${new java.io.File(dir).getName}/files")
-        graft.pipeline.Staged(s, dir, "gtsv_files") {
-          graft.sources.GraftTsv.write(t(s, dir, "documents"), out, 8)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
-        s.read.format("graft-tsv").load(out)
-          .agg(count(lit(1)).as("n_rows"), min("doc_id").as("min_id"),
-            max("doc_id").as("max_id"))
-      },
+      (s, dir) => s.read.format("graft-tsv").load(gtsvFiles(s, dir))
+        .agg(count(lit(1)).as("n_rows"), min("doc_id").as("min_id"),
+          max("doc_id").as("max_id")),
       Some("""SELECT count(*) AS n_rows, min(doc_id) AS min_id,
           max(doc_id) AS max_id FROM documents""")),
 
@@ -553,15 +655,10 @@ object Relational {
       // (the runtime filter then simply doesn't inject; correctness is
       // unchanged, the scan just reads all zones).
       (s, dir) => {
-        val out = scratch(s"gtsv_${new java.io.File(dir).getName}/files")
-        graft.pipeline.Staged(s, dir, "gtsv_files") {
-          graft.sources.GraftTsv.write(t(s, dir, "documents"), out, 8)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
         val dim = t(s, dir, "documents")
           .select(col("doc_id"), col("n_chars"))
           .filter(col("n_chars") < 60)
-        s.read.format("graft-tsv").load(out)
+        s.read.format("graft-tsv").load(gtsvFiles(s, dir))
           .select("doc_id", "lang", "source")
           .join(dim, "doc_id")
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -585,16 +682,8 @@ object Relational {
       // of both fact sides simply does not exist, because the layout
       // already IS the distribution the join needs.
       (s, dir) => {
-        val base = scratch(s"gtsv_spj_${new java.io.File(dir).getName}")
+        val base = gtsvSpj(s, dir)
         val (outA, outB) = (s"$base/a", s"$base/b")
-        graft.pipeline.Staged(s, dir, "gtsv_spj") {
-          graft.sources.GraftTsv.writePartitioned(
-            t(s, dir, "documents"), outA, 4)
-          graft.sources.GraftTsv.writePartitioned(
-            t(s, dir, "documents")
-              .filter(pmod(col("doc_id"), lit(2L)) === 0), outB, 4)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
         // spark.sql.sources.v2.bucketing.enabled is a SESSION default
         // (set by Verify/Bench/SparkTestSession builders): mutating it
         // here would change planner config for every later query in the
@@ -627,21 +716,10 @@ object Relational {
       // matching lang's files are opened). The filter stays residual,
       // so pruning is an optimization, never correctness; v1 files
       // without a stamp are simply never pruned.
-      (s, dir) => {
-        val base = scratch(s"gtsv_spj_${new java.io.File(dir).getName}")
-        graft.pipeline.Staged(s, dir, "gtsv_spj") {
-          graft.sources.GraftTsv.writePartitioned(
-            t(s, dir, "documents"), s"$base/a", 4)
-          graft.sources.GraftTsv.writePartitioned(
-            t(s, dir, "documents")
-              .filter(pmod(col("doc_id"), lit(2L)) === 0), s"$base/b", 4)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
-        s.read.format("graft-tsv").load(s"$base/a")
-          .filter(col("lang") === "en")
-          .select("doc_id", "lang", "n_chars")
-          .orderBy("doc_id")
-      },
+      (s, dir) => s.read.format("graft-tsv").load(s"${gtsvSpj(s, dir)}/a")
+        .filter(col("lang") === "en")
+        .select("doc_id", "lang", "n_chars")
+        .orderBy("doc_id"),
       Some("""SELECT doc_id, lang, n_chars FROM documents
         WHERE lang = 'en' ORDER BY doc_id""")),
 
@@ -652,25 +730,10 @@ object Relational {
       // the whole struct (PartitionPruneSpec asserts it). At 100 TB
       // the difference is scanning two columns of a 200-field document
       // struct versus all of them.
-      (s, dir) => {
-        val out = scratch(s"nested_${new java.io.File(dir).getName}")
-        graft.pipeline.Staged(s, dir, "docs_nested") {
-          t(s, dir, "documents")
-            .select(col("doc_id"),
-              struct(col("lang"),
-                struct(col("source").as("name")).as("origin"),
-                col("n_chars"), col("text")).as("meta"))
-            .write.mode("overwrite").parquet(out)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
-        // Read OUTSIDE the staged persist: an InMemoryRelation here
-        // would satisfy the values but bypass the parquet reader —
-        // the nested-pruning claim must hit the actual scan.
-        s.read.parquet(out)
-          .filter(col("meta.lang") === "en")
-          .select(col("doc_id"), col("meta.origin.name").as("src"))
-          .orderBy("doc_id")
-      },
+      (s, dir) => s.read.parquet(docsNested(s, dir))
+        .filter(col("meta.lang") === "en")
+        .select(col("doc_id"), col("meta.origin.name").as("src"))
+        .orderBy("doc_id"),
       Some("""SELECT doc_id, source AS src FROM documents
         WHERE lang = 'en' ORDER BY doc_id""")),
 
@@ -681,21 +744,12 @@ object Relational {
       // partitions are never read — while the residual data filter and
       // the 3-column projection reach the parquet reader as
       // PushedFilters / ReadSchema. PartitionPruneSpec asserts all
-      // three in the executed plan. The staged partitioned layout is
-      // written once per session+dir (the same pay-at-write,
-      // amortize-per-read contract as join_bucketed).
-      (s, dir) => {
-        val out = scratch(s"events_part_${new java.io.File(dir).getName}")
-        graft.pipeline.Staged(s, dir, "events_partitioned") {
-          t(s, dir, "events").write.mode("overwrite")
-            .partitionBy("event_type").parquet(out)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
-        s.read.parquet(out)
-          .filter(col("event_type") === "click" && col("value") > 100.0)
-          .select("event_id", "user_id", "value")
-          .orderBy("event_id", "user_id", "value")
-      },
+      // three in the executed plan. The partitioned layout is written
+      // once per input generation (pay at write, amortize per read).
+      (s, dir) => s.read.parquet(eventsPartitioned(s, dir))
+        .filter(col("event_type") === "click" && col("value") > 100.0)
+        .select("event_id", "user_id", "value")
+        .orderBy("event_id", "user_id", "value"),
       Some("""SELECT event_id, user_id, value
         FROM events WHERE event_type = 'click' AND value > 100.0
         ORDER BY event_id, user_id, value""")),
@@ -742,34 +796,7 @@ object Relational {
       // carries per-file min/max for pruning — layout_global_index
       // demonstrates that side.
       (s, dir) => {
-        val out = scratch(s"manifest_sink_${new java.io.File(dir).getName}")
-        graft.pipeline.Staged(s, dir, "manifest_sink") {
-          // The scratch directory outlives the JVM while the Staged
-          // marker does not — clear first or stale orphans accumulate.
-          deleteRecursively(new java.io.File(out))
-          val committed = t(s, dir, "documents")
-            .filter(col("doc_id") % 2 === 0)
-            .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-          committed.repartition(2).write.mode("overwrite").parquet(s"$out/data")
-          val files = new java.io.File(s"$out/data").listFiles()
-            .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
-          // Plant the orphan AFTER the data write: a concurrent
-          // writer's uncommitted file, named like a data file so a
-          // directory listing WOULD pick it up.
-          t(s, dir, "documents").filter(col("doc_id") % 2 === 1)
-            .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$out/tmp_orphan")
-          val orphanSrc = new java.io.File(s"$out/tmp_orphan").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(orphanSrc.toPath,
-            java.nio.file.Paths.get(s"$out/data/part-orphan-uncommitted.parquet"))
-          deleteRecursively(new java.io.File(s"$out/tmp_orphan"))
-          // The commit point: the manifest write is the LAST operation.
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$out/manifest.txt"),
-            files.mkString("\n").getBytes("UTF-8"))
-          s.range(1).toDF("ok") // marker: sink staged once per session+dir
-        }
+        val out = manifestSink(s, dir)
         val committedFiles = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(s"$out/manifest.txt")), "UTF-8")
           .split("\n").toSeq.filter(_.nonEmpty).map(n => s"$out/data/$n")
@@ -845,34 +872,7 @@ object Relational {
       // (delete non-live) leaves exactly the v2 snapshot readable —
       // ManifestGcSpec pins that on a copy of the layout.
       (s, dir) => {
-        val out = scratch(s"manifest_gc_${new java.io.File(dir).getName}")
-        graft.pipeline.Staged(s, dir, "manifest_gc") {
-          deleteRecursively(new java.io.File(out))
-          val even = t(s, dir, "documents")
-            .filter(col("doc_id") % 2 === 0)
-            .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-          even.filter(col("doc_id") % 4 === 0)
-            .coalesce(1).write.parquet(s"$out/data/f0")
-          even.filter(col("doc_id") % 4 === 2)
-            .coalesce(1).write.parquet(s"$out/data/f1")
-          def pq(sub: String): Seq[String] =
-            new java.io.File(s"$out/data/$sub").listFiles()
-              .filter(_.getName.endsWith(".parquet"))
-              .map(f => s"data/$sub/${f.getName}").toSeq.sorted
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$out/manifest_v1.txt"),
-            (pq("f0") ++ pq("f1")).mkString("\n").getBytes("UTF-8"))
-          // v2: compaction rewrite — same rows, one file, new manifest.
-          even.coalesce(1).write.parquet(s"$out/data/f2")
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$out/manifest_v2.txt"),
-            pq("f2").mkString("\n").getBytes("UTF-8"))
-          // Crashed writer's uncommitted output: on disk, in no manifest.
-          t(s, dir, "documents").filter(col("doc_id") % 2 === 1)
-            .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-            .coalesce(1).write.parquet(s"$out/data/f3")
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
+        val out = manifestGc(s, dir)
         def manifest(v: String): Set[String] = new String(
           java.nio.file.Files.readAllBytes(
             java.nio.file.Paths.get(s"$out/manifest_$v.txt")), "UTF-8")
@@ -913,15 +913,7 @@ object Relational {
       // bit-faithful) and the oracle checks the PARSED table against
       // the original rows directly.
       (s, dir) => {
-        val out = scratch(s"events_log_${new java.io.File(dir).getName}")
-        graft.pipeline.Staged(s, dir, "events_textlog") {
-          t(s, dir, "events")
-            .select(concat_ws("|", lit("evt"), col("event_id"),
-              col("user_id"), col("event_type"),
-              money(col("value")).cast("string")).as("value"))
-            .write.mode("overwrite").text(out)
-          s.range(1).toDF("ok") // marker: log staged once per session+dir
-        }
+        val out = eventsTextlog(s, dir)
         // ONE anchored validation match per line, then a cheap split —
         // not one regexp_extract per field, which would re-run the
         // whole pattern once per column (4x the per-line regex cost,
@@ -953,26 +945,8 @@ object Relational {
       // the selective predicate lives on the dimension, not the fact.
       // DppSpec asserts the DynamicPruningExpression in the scan.
       (s, dir) => {
-        import s.implicits._
-        val out = scratch(s"events_part_${new java.io.File(dir).getName}")
-        val dimOut = scratch(s"event_dim_${new java.io.File(dir).getName}")
-        graft.pipeline.Staged(s, dir, "events_partitioned") {
-          t(s, dir, "events").write.mode("overwrite")
-            .partitionBy("event_type").parquet(out)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
-        graft.pipeline.Staged(s, dir, "event_dim") {
-          // The dim must be FILE-backed for the pruning rule to see a
-          // selective Filter: a local relation folds the predicate into
-          // its rows at optimization time and DPP never triggers.
-          Seq(("view", "browse"), ("click", "conv"), ("purchase", "conv"),
-            ("signup", "acct"), ("error", "ops"))
-            .toDF("event_type", "category")
-            .write.mode("overwrite").parquet(dimOut)
-          s.range(1).toDF("ok")
-        }
-        val dim = s.read.parquet(dimOut)
-        s.read.parquet(out)
+        val dim = s.read.parquet(eventDim(s, dir))
+        s.read.parquet(eventsPartitioned(s, dir))
           .join(dim.filter(col("category") === "conv"), Seq("event_type"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),

@@ -91,10 +91,9 @@ object Similarity {
     s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
 
   /** The shared per-(doc, term) tf stage (tokenize → normalize →
-    * explode → count), disk-staged under the tag the text family
-    * also uses.
+    * explode → count), disk-staged; text_tfidf reads it too.
     */
-  private def tfStage(s: SparkSession, dir: String): DataFrame =
+  private[queries] def tfStage(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.Staged.disk(s, dir, "tfidf_tf") {
       t(s, dir, "documents")
         .select(col("doc_id"), explode(
@@ -313,6 +312,12 @@ object Similarity {
     */
   private val PqRefine = 96
 
+  /** The staged PQ code table (nearest codeword per vector subspace). */
+  private def pqCodes(s: SparkSession, dir: String): DataFrame =
+    graft.pipeline.Staged.disk(s, dir, "pq_codes") {
+      pqNearest(pqSubs(s, dir), pqCents(s, dir))
+    }
+
   /** IVF-probed candidates scored by PQ asymmetric distance, ADC
     * top-[[PqRefine]] shortlist refined by exact cosine, top-3 per
     * query — the composed index (see sim_ann_ivfpq); shared with its
@@ -330,9 +335,7 @@ object Similarity {
       .select("q_id", "vec_id").distinct()
     val subs = pqSubs(s, dir)
     val cents = pqCents(s, dir)
-    val codes = graft.pipeline.Staged.disk(s, dir, "pq_codes") {
-      pqNearest(subs, cents)
-    }
+    val codes = pqCodes(s, dir)
     val lut = subs.filter(col("vec_id") < QueryVecs)
       .crossJoin(broadcast(cents))
       .select(col("vec_id").as("q_id"), col("m"), col("c_id"),
@@ -675,9 +678,7 @@ object Similarity {
       (s, dir) => {
         val subs = pqSubs(s, dir)
         val cents = pqCents(s, dir)
-        val codes = graft.pipeline.Staged.disk(s, dir, "pq_codes") {
-          pqNearest(subs, cents)
-        }
+        val codes = pqCodes(s, dir)
         val lut = subs.filter(col("vec_id") < QueryVecs)
           .crossJoin(broadcast(cents))
           .select(col("vec_id").as("q_id"), col("m"), col("c_id"),

@@ -35,23 +35,23 @@ private[graft] object StreamCdc {
     * per (plan, input-data) generation in the immutable shared tree
     * and hardlink-cloned into the per-run `snap` the merge mutates —
     * the run pays a directory clone, not a Spark write job (the same
-    * staged-input discipline as the two-phase harness).
+    * staged-input discipline as the two-phase harness). The one
+    * builder [[writeBase]] and [[prestage]] share.
     */
-  /** The staged base-tree frame — ONE builder shared by [[writeBase]]
-    * and [[prestage]] so both produce the identical logical plan and
-    * therefore the identical staged-generation key.
-    */
-  private def baseFrame(s: SparkSession, dir: String): DataFrame =
-    CdcFeed.base(s, dir)
-      .select(col("o_orderkey"), col("b_status").as("status"),
-        col("b_price").as("price"))
-      .withColumn("bk", bk(col("o_orderkey")))
+  private def stagedBase(s: SparkSession, dir: String): String =
+    StreamRuns.stageAsPartitionedTree(
+      CdcFeed.base(s, dir)
+        .select(col("o_orderkey"), col("b_status").as("status"),
+          col("b_price").as("price"))
+        .withColumn("bk", bk(col("o_orderkey"))),
+      "upsert-base", Seq("bk"), dir)
 
-  def writeBase(s: SparkSession, dir: String, snap: String): Unit = {
-    val staged = StreamRuns.stageAsPartitionedTree(
-      baseFrame(s, dir), "upsert-base", Seq("bk"), dir)
-    StreamRuns.cloneTree(staged, snap)
-  }
+  /** The staged change-feed files: [[applyFeed]]'s and [[prestage]]'s. */
+  private def stagedFeed(s: SparkSession, dir: String): String =
+    StreamRuns.stageAsFiles(CdcFeed.changes(s, dir), "upsert-feed", 4, dir)
+
+  def writeBase(s: SparkSession, dir: String, snap: String): Unit =
+    StreamRuns.cloneTree(stagedBase(s, dir), snap)
 
   /** Generate (or mtime-touch) the staged base tree and change-feed
     * files without running the merge — the bench's staging phase
@@ -59,9 +59,8 @@ private[graft] object StreamCdc {
     * the upsert query.
     */
   def prestage(s: SparkSession, dir: String): Unit = {
-    StreamRuns.stageAsPartitionedTree(baseFrame(s, dir), "upsert-base",
-      Seq("bk"), dir)
-    StreamRuns.stageAsFiles(CdcFeed.changes(s, dir), "upsert-feed", 4, dir)
+    stagedBase(s, dir)
+    stagedFeed(s, dir)
     ()
   }
 
@@ -69,9 +68,8 @@ private[graft] object StreamCdc {
     * copy-on-write over the touched buckets only.
     */
   def applyFeed(s: SparkSession, dir: String, snap: String): Unit = {
-    val changes = CdcFeed.changes(s, dir)
-    val src = StreamRuns.stageAsFiles(changes, "upsert-feed", 4, dir)
-    val q = s.readStream.schema(changes.schema)
+    val src = stagedFeed(s, dir)
+    val q = s.readStream.schema(CdcFeed.changes(s, dir).schema)
       .option("maxFilesPerTrigger", 2).parquet(src)
       .writeStream
       .option("checkpointLocation", StreamRuns.fresh("upsert-ckpt"))
@@ -270,32 +268,31 @@ object Streaming {
     }
   }
 
-  /** The batch frame behind the shared "events" staged copy — ONE
-    * builder for [[eventsStream]] and [[prestageInputs]] so the staged
-    * generation key (plan fingerprint) matches between the staging
-    * phase and the queries.
-    */
+  /** The batch frame behind the shared "events" staged copy. */
   private def eventsBatch(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
 
-  /** The documents frame behind the staged "ingest" copy (same shared
-    * builder discipline as [[eventsBatch]]).
-    */
+  /** The staged 4-file "events" copy: [[eventsStream]]'s and prestage's. */
+  private def eventsFiles(s: SparkSession, dir: String): String =
+    StreamRuns.stageAsFiles(eventsBatch(s, dir), "events", 4, dir)
+
+  /** The documents frame behind the staged "ingest" copy. */
   private def ingestDocs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
         col("text"))
 
-  /** Stream the events table back from a staged multi-file parquet copy. */
-  private def eventsStream(s: SparkSession, dir: String, tag: String,
-      files: Int, perTrigger: Option[Int]): DataFrame = {
-    val batch = eventsBatch(s, dir)
-    // Shared "events" staging key: all event-stream queries reuse one
-    // staged copy per scale dir (memoized in StreamRuns).
-    val src = StreamRuns.stageAsFiles(batch, "events", files, dir)
-    val r = s.readStream.schema(batch.schema)
+  /** The staged 4-file "ingest" copy: the ingest query's and prestage's. */
+  private def ingestFiles(s: SparkSession, dir: String): String =
+    StreamRuns.stageAsFiles(ingestDocs(s, dir), "ingest", 4, dir)
+
+  /** Stream the events table back from its staged multi-file copy. */
+  private def eventsStream(s: SparkSession, dir: String,
+      perTrigger: Option[Int]): DataFrame = {
+    val src = eventsFiles(s, dir)
+    val r = s.readStream.schema(eventsBatch(s, dir).schema)
     perTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n)).parquet(src)
   }
 
@@ -396,8 +393,8 @@ object Streaming {
     * 1-row cut aggregates).
     */
   def prestageInputs(s: SparkSession, dir: String): Unit = {
-    StreamRuns.stageAsFiles(eventsBatch(s, dir), "events", 4, dir)
-    StreamRuns.stageAsFiles(ingestDocs(s, dir), "ingest", 4, dir)
+    eventsFiles(s, dir)
+    ingestFiles(s, dir)
     StreamCdc.prestage(s, dir)
     val phases = Seq(
       "updmode" -> updmodePhases(s, dir),
@@ -422,13 +419,8 @@ object Streaming {
       // filter+project per batch, so sink content == the batch result
       // over the same files, which is what the oracle checks.
       (s, dir) => {
-        val out = scratch(s"gtsv_${new java.io.File(dir).getName}/files")
-        graft.pipeline.Staged(s, dir, "gtsv_files") {
-          graft.sources.GraftTsv.write(t(s, dir, "documents"), out, 8)
-          s.range(1).toDF("ok") // marker: layout staged once per session+dir
-        }
         val stream = s.readStream.format("graft-tsv")
-          .option("maxFilesPerTrigger", "2").load(out)
+          .option("maxFilesPerTrigger", "2").load(Relational.gtsvFiles(s, dir))
           .filter(col("n_chars") >= 50)
           .select(col("doc_id"), col("lang"), col("n_chars"))
         StreamRuns.runToMemory(s, stream, "append", "gtsv_ingest")
@@ -443,10 +435,9 @@ object Streaming {
       // foreachBatch, parquet sink. Final sink content == the batch
       // result over the same input.
       (s, dir) => {
-        val docs = ingestDocs(s, dir)
-        val src = StreamRuns.stageAsFiles(docs, "ingest", 4, dir)
+        val src = ingestFiles(s, dir)
         val sink = StreamRuns.fresh("ingest-sink")
-        val q = s.readStream.schema(docs.schema)
+        val q = s.readStream.schema(ingestDocs(s, dir).schema)
           .option("maxFilesPerTrigger", 2).parquet(src)
           .withColumn("fp", Text.fingerprint(col("text")))
           .writeStream
@@ -500,7 +491,7 @@ object Streaming {
       // complete mode so every window reaches the sink regardless of
       // the final watermark position.
       (s, dir) => {
-        val agg = eventsStream(s, dir, "tumble", 4, None)
+        val agg = eventsStream(s, dir, None)
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
           .agg(count(lit(1)).as("n"), sum(money(col("value"))).as("sv"))
@@ -570,7 +561,7 @@ object Streaming {
       // 10-minute windows sliding by 5: every event lands in exactly
       // two windows; the oracle unions the two bucket shifts.
       (s, dir) => {
-        val agg = eventsStream(s, dir, "slide", 4, None)
+        val agg = eventsStream(s, dir, None)
           .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
           .agg(count(lit(1)).as("n"))
         StreamRuns.runToMemory(s, agg, "complete", "slide")
@@ -589,7 +580,7 @@ object Streaming {
       // timeout (session end is exclusive); the oracle's
       // gaps-and-islands break uses the same >= boundary.
       (s, dir) => {
-        val agg = eventsStream(s, dir, "sess", 4, None)
+        val agg = eventsStream(s, dir, None)
           .groupBy(session_window(col("ts"), "5 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n"))
         StreamRuns.runToMemory(s, agg, "complete", "sess")
@@ -618,7 +609,7 @@ object Streaming {
       // watermark-bounded state. Output projects the key set, which is
       // order-independent and exactly the batch DISTINCT.
       (s, dir) => {
-        val dd = eventsStream(s, dir, "dedup", 4, None)
+        val dd = eventsStream(s, dir, None)
           .withWatermark("ts", "10 minutes")
           .dropDuplicatesWithinWatermark("user_id", "event_type")
           .select(col("user_id"), col("event_type"))
@@ -721,7 +712,7 @@ object Streaming {
       // so group-iteration order cannot perturb them.
       (s, dir) => {
         import s.implicits._
-        val src = eventsStream(s, dir, "state", 4, Some(2))
+        val src = eventsStream(s, dir, Some(2))
         val ds = src.select(col("user_id"), col("value")).as[(Long, Double)]
         val out = ds.groupByKey(_._1).flatMapGroupsWithState(
             OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -754,7 +745,7 @@ object Streaming {
       // >= 2 micro-batches.
       (s, dir) => {
         import s.implicits._
-        val src = eventsStream(s, dir, "tws", 4, Some(2))
+        val src = eventsStream(s, dir, Some(2))
         val ds = src.select(col("user_id"), col("value")).as[(Long, Double)]
         val out = ds.groupByKey(_._1).transformWithState(
           new UserStatsProcessor, TimeMode.None(), OutputMode.Append())
@@ -777,7 +768,7 @@ object Streaming {
       // independently across >= 2 micro-batches.
       (s, dir) => {
         import s.implicits._
-        val src = eventsStream(s, dir, "mapstate", 4, Some(2))
+        val src = eventsStream(s, dir, Some(2))
         val ds = src.select(col("user_id"), col("event_type"), col("value"))
           .as[(Long, String, Double)]
         val out = ds.groupByKey(_._1).transformWithState(
@@ -881,12 +872,12 @@ object Streaming {
       // on unbounded input). Single AvailableNow pass, so the emitted
       // set is exactly the closed-form batch join.
       (s, dir) => {
-        val clicks = eventsStream(s, dir, "ssj", 4, None)
+        val clicks = eventsStream(s, dir, None)
           .filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("c_ts"))
           .withWatermark("c_ts", "10 minutes")
-        val purchases = eventsStream(s, dir, "ssj2", 4, None)
+        val purchases = eventsStream(s, dir, None)
           .filter(col("event_type") === "purchase")
           .select(col("event_id").as("purch_id"), col("user_id").as("p_user"),
             col("ts").as("p_ts"))
@@ -917,12 +908,12 @@ object Streaming {
       // fully below it. Clicks younger than that stay in state and are
       // never emitted — the oracle computes exactly that set.
       (s, dir) => {
-        val clicks = eventsStream(s, dir, "sslj", 4, None)
+        val clicks = eventsStream(s, dir, None)
           .filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("c_ts"))
           .withWatermark("c_ts", "10 minutes")
-        val purchases = eventsStream(s, dir, "sslj2", 4, None)
+        val purchases = eventsStream(s, dir, None)
           .filter(col("event_type") === "purchase")
           .select(col("event_id").as("purch_id"), col("user_id").as("p_user"),
             col("ts").as("p_ts"))
@@ -1027,7 +1018,7 @@ object Streaming {
         val dim = t(s, dir, "events")
           .groupBy("user_id")
           .agg(min_by(col("event_type"), col("event_id")).as("seg"))
-        val agg = eventsStream(s, dir, "sstatic", 4, None)
+        val agg = eventsStream(s, dir, None)
           .join(broadcast(dim), "user_id")
           .groupBy("seg")
           .agg(count(lit(1)).as("n"), sum(money(col("value"))).as("sv"))

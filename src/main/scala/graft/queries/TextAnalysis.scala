@@ -570,18 +570,9 @@ object TextAnalysis {
         // appears once in tf, so df = tf row-count per term) — without
         // the persist, Spark's no-common-subtree planning would explode
         // and shuffle the whole corpus once per consumer.
-        // Staged.disk, not the memory-only Staged: the hybrid/RRF
-        // queries build the IDENTICAL (doc, term, cnt) plan under the
-        // same tag via Staged.disk — one spelling means one shared
-        // artifact (same semanticHash) across JVMs instead of a memo
-        // entry that recomputes per process.
-        val tf0 = graft.pipeline.Staged.disk(s, dir, "tfidf_tf") {
-          t(s, dir, "documents")
-            .select(col("doc_id"), explode(toks).as("term"))
-            .filter(length(col("term")) > 0)
-            .groupBy("doc_id", "term")
-            .agg(count(lit(1)).as("cnt"))
-        }
+        // The same disk-staged (doc, term, cnt) stage the hybrid/RRF
+        // queries read.
+        val tf0 = Similarity.tfStage(s, dir)
         // Per-doc length as a map-side-combined aggregate joined back,
         // NOT an unbounded window over the (doc, term) stream.
         // lens is doc-count-sized and df vocabulary-sized — both GROW

@@ -162,6 +162,31 @@ object StreamRuns {
     spark.table(qn)
   }
 
+  /** Two-phase feed file counts. Phase 2 MUST be one part file: the
+    * query runs under the default continuous-polling trigger, so a
+    * multi-file handoff could have a micro-batch fire between two
+    * publications and split phase 2 — a watermark advance mid-phase
+    * would nondeterministically drop late-phase rows. One file + one
+    * atomic link (the link exposes already-complete content in a
+    * single directory operation) publishes the whole phase in one
+    * step, preserving the MemoryStream-equivalent "batch 2 = phase 2"
+    * contract.
+    */
+  private val Phase1Files = 2
+  private val Phase2Files = 1
+
+  /** Stage (or mtime-touch) a two-phase feed's immutable file sets and
+    * return their paths — the one builder of both phases' generations,
+    * called by [[twoPhaseFilesToMemory]] and, WITHOUT starting a
+    * stream, from the bench's staging phase, so a cold scratch mount
+    * pays the generation write jobs inside staging_sec, not inside
+    * whichever timed query touches the tree first.
+    */
+  def prestageTwoPhase(tag: String, dir: String,
+      p1: DataFrame, p2: DataFrame): (String, String) =
+    (stageAsFiles(p1, s"2p-$tag-p1", Phase1Files, dir),
+      stageAsFiles(p2, s"2p-$tag-p2", Phase2Files, dir))
+
   /** Two-phase FILE replay — [[twoPhaseToMemory]] with
     * corpus-independent harness memory: both phases are staged as
     * parquet file sets (executor-side writes — nothing is ever
@@ -177,35 +202,6 @@ object StreamRuns {
     * in-group sort), which is also what makes their closed-form
     * oracles expressible at all.
     */
-  /** Two-phase feed file counts, shared by the run path and
-    * [[prestageTwoPhase]] so the staged generation keys (which embed
-    * the file count) can never diverge between staging and running.
-    * Phase 2 MUST be one part file: the query runs under the default
-    * continuous-polling trigger, so a multi-file handoff could have a
-    * micro-batch fire between two publications and split phase 2 — a
-    * watermark advance mid-phase would nondeterministically drop
-    * late-phase rows. One file + one atomic link (the link exposes
-    * already-complete content in a single directory operation)
-    * publishes the whole phase in one step, preserving the
-    * MemoryStream-equivalent "batch 2 = phase 2" contract.
-    */
-  private val Phase1Files = 2
-  private val Phase2Files = 1
-
-  /** Stage (or mtime-touch) a two-phase feed's immutable file sets
-    * WITHOUT starting a stream — the staging half of
-    * [[twoPhaseFilesToMemory]], called from the bench's staging phase
-    * so a cold scratch mount pays the generation write jobs inside
-    * staging_sec, not inside whichever timed query touches the tree
-    * first.
-    */
-  def prestageTwoPhase(tag: String, dir: String,
-      p1: DataFrame, p2: DataFrame): Unit = {
-    stageAsFiles(p1, s"2p-$tag-p1", Phase1Files, dir)
-    stageAsFiles(p2, s"2p-$tag-p2", Phase2Files, dir)
-    ()
-  }
-
   def twoPhaseFilesToMemory(
       spark: SparkSession, tag: String, dir: String,
       p1: DataFrame, p2: DataFrame,
@@ -218,8 +214,7 @@ object StreamRuns {
     // pays two filesystem links instead of two Spark write jobs. The
     // source dir must still be per-run — phase 2 is published into it
     // mid-stream, so it is consumed, never shared.
-    val p1Dir = stageAsFiles(p1, s"2p-$tag-p1", Phase1Files, dir)
-    val p2Dir = stageAsFiles(p2, s"2p-$tag-p2", Phase2Files, dir)
+    val (p1Dir, p2Dir) = prestageTwoPhase(tag, dir, p1, p2)
     val srcDir = fresh(s"$tag-2psrc")
     publishParts(p1Dir, srcDir)
     val qn = s"${tag}_${UUID.randomUUID().toString.take(8).replace("-", "")}"
@@ -302,13 +297,10 @@ object StreamRuns {
     * six — under a DETERMINISTIC generation name on the shared scratch
     * mount, so a FRESH JVM (a bench after a Verify or test run)
     * discovers the previous JVM's copy instead of re-running the
-    * staging write job. The key is Staged.spillThrough's: the
-    * canonicalized-plan fingerprint (semanticHash is NOT JVM-stable for
-    * file relations) plus the fingerprint of `dir`, the query's input
-    * scale directory (an in-place testdata regeneration leaves every
-    * plan identical). Every lookup re-checks the generation on disk, so
-    * a tree swept by a concurrent JVM or any external cleanup is
-    * re-staged, never served dead.
+    * staging write job. The name is `Staged.generation`'s: `df`'s plan
+    * fingerprint plus the fingerprint of `dir`, the query's input scale
+    * directory. Every lookup re-checks the generation on disk, so a
+    * swept tree is re-staged, never served dead.
     */
   def stageAsFiles(df: DataFrame, tag: String, files: Int,
       dir: String): String =
@@ -354,17 +346,17 @@ object StreamRuns {
   }
 
   /** Commit (or reuse) the `staged-<tag>-<kind>-<planFp>-<dataFp>`
-    * generation of `df` through the generation store shared with
-    * Staged.spillThrough.
+    * generation of `df` under the scratch root, named by
+    * `Staged.generation` like every other generation. The touch log
+    * records the name without its data fingerprint: one scale dir's
+    * touches share it.
     */
   private def stagedGeneration(df: DataFrame, tag: String, kind: String,
       dir: String)(write: String => Unit): String = {
-    val planFp = graft.pipeline.Staged.planFingerprint(
-      df.queryExecution.logical)
-    val dataFp = graft.pipeline.Staged.inputFingerprint(dir)
-    val gen = s"$StagedPrefix$tag-$kind-$planFp-$dataFp"
-    genTouches.add(gen)
-    genStore.generation(new java.io.File(ScratchRoot), gen,
-      s"$StagedPrefix$tag-$kind-")(write)
+    val prefix = s"$StagedPrefix$tag-$kind-"
+    val planFp = graft.pipeline.Staged.planFingerprint(df.queryExecution.logical)
+    genTouches.add(s"$prefix$planFp")
+    graft.pipeline.Staged.generation(genStore, new java.io.File(ScratchRoot),
+      prefix, planFp, dir)(write)
   }
 }

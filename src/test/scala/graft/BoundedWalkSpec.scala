@@ -99,7 +99,7 @@ class BoundedWalkSpec extends AnyFunSuite {
     assert(!bounded(docs)) // documents.parquet is corpus-scaled
     // The round-13 advisor trap: a corpus artifact whose path merely
     // CONTAINS a dimension name must not inherit the bound.
-    val trap = "/root/repo/target/scratch/boundedwalk/part.parquet_like"
+    val trap = graft.queries.QDef.scratch("boundedwalk/part.parquet_like")
     docs.limit(200).write.mode("overwrite").parquet(trap)
     assert(!bounded(spark.read.parquet(trap)))
   }
@@ -161,7 +161,7 @@ class BoundedWalkSpec extends AnyFunSuite {
     // One root bounded, one not (same schema, non-dim name): the
     // relation is only as bounded as its LARGEST root — exists() here
     // would have certified a corpus-scaled mixed scan.
-    val other = "/root/repo/target/scratch/boundedwalk/notdim.parquet"
+    val other = graft.queries.QDef.scratch("boundedwalk/notdim.parquet")
     spark.read.parquet(s"$sf/nation.parquet")
       .write.mode("overwrite").parquet(other)
     assert(!bounded(spark.read.parquet(s"$sf/nation.parquet", other)))
@@ -346,7 +346,7 @@ class BoundedWalkSpec extends AnyFunSuite {
     // one-row-per-value).
     assert(bounded(spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("vec_id") < 5)))
-    val crossed = "/root/repo/target/scratch/boundedwalk/embeddings.parquet"
+    val crossed = graft.queries.QDef.scratch("boundedwalk/embeddings.parquet")
     docs.select(col("doc_id")).limit(300)
       .write.mode("overwrite").parquet(crossed)
     assert(!bounded(spark.read.parquet(crossed).filter(col("doc_id") < 5)),
@@ -442,8 +442,8 @@ class BoundedWalkSpec extends AnyFunSuite {
       // nothing outside Staged.cacheRoot (and nothing without a
       // registered build plan).
       "staged-tag lookalike directory outside the cache root" -> {
-        val fake = "/root/repo/target/scratch/boundedwalk/" +
-          "cc_labels-1234567890-aabbccdd11223344"
+        val fake = graft.queries.QDef.scratch(
+          "boundedwalk/cc_labels-1234567890-aabbccdd11223344")
         docs.limit(200).write.mode("overwrite").parquet(fake)
         spark.read.parquet(fake)
       },

@@ -28,7 +28,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    returned plan reads the sink back, and the written frame is the
   *    same bounded builder the oracle recomputes;
   *  - a registered staging path (Stages.spillThrough — swept via
-  *    recordedBuildPlans by StagedBuildGuardSpec);
+  *    recordedBuildPlans by StagedBuildGuardSpec; `Staged.layout` —
+  *    a query fixture's file layout, committed as a generation, whose
+  *    frames are the sink-by-contract inputs above);
   *  - an EagerWrites.run call site itself
   *    (Pipeline.scala:pipeline_batch_envelope);
   *  - the streaming harness's foreachBatch/feed writes (stream_*
@@ -57,30 +59,28 @@ class EagerWriteLintSpec extends AnyFunSuite {
     "Graph.scala:writeGraph" -> 2, // graph sink by contract (O25-O29)
     "Pipeline.scala:pipeline_batch_envelope" -> 1, // the EagerWrites.run site
     "Relational.scala:bucketedTables" -> 2, // bucketed CTAS staging, plan = oracle-replayed projections
-    "Relational.scala:join_dpp" -> 2,
-    "Relational.scala:join_dsv2_runtime_prune" -> 1,
+    // Query fixture layouts committed through Staged.layout (sink-by-contract):
+    "Relational.scala:docsNested" -> 1,
+    "Relational.scala:eventDim" -> 1,
+    "Relational.scala:eventsPartitioned" -> 1,
+    "Relational.scala:eventsTextlog" -> 1,
+    "Relational.scala:gtsvFiles" -> 1,
+    "Relational.scala:manifestGc" -> 1,
+    "Relational.scala:manifestSink" -> 2,
     "Relational.scala:manifestVersions" -> 1,
-    "Relational.scala:pipeline_manifest_gc" -> 4,
     "Relational.scala:scan_csv_docs" -> 1,
-    "Relational.scala:scan_dsv2_agg_pushdown" -> 1,
-    "Relational.scala:scan_dsv2_skipping" -> 1,
     "Relational.scala:scan_fixed_width" -> 1,
     "Relational.scala:scan_json_corrupt" -> 1,
     "Relational.scala:scan_json_docs" -> 1,
-    "Relational.scala:scan_nested_pushdown" -> 1,
     "Relational.scala:scan_orc_docs" -> 1,
     "Relational.scala:scan_parquet_schema_merge" -> 2,
-    "Relational.scala:scan_partition_pruned" -> 1,
-    "Relational.scala:scan_text_regex" -> 1,
     "Relational.scala:sink_compacted" -> 1,
     "Relational.scala:sink_csv_roundtrip" -> 1,
     "Relational.scala:sink_dynamic_overwrite" -> 2,
     "Relational.scala:sink_jsonl_sharded" -> 1,
-    "Relational.scala:sink_manifest_atomic" -> 2,
     "Relational.scala:sink_parquet_partitioned" -> 1,
     "Stages.scala:spillThrough" -> 1, // registered: recordedBuildPlans sweep
     "Streaming.scala:applyFeed" -> 1, // foreachBatch CDC merge (stream scope)
-    "Streaming.scala:stream_dsv2_ingest" -> 1,
     "Streaming.scala:stream_file_ingest" -> 1,
     "XmlDocs.scala:writeCorpusXml" -> 2, // deterministic XML fixture staging
     // Rows below entered with the round-18 widening to all of graft/:

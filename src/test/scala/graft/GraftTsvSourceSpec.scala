@@ -18,7 +18,7 @@ class GraftTsvSourceSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val dir: String = {
-    val out = "/root/repo/target/scratch/gtsv_spec/files"
+    val out = graft.queries.QDef.scratch("gtsv_spec/files")
     GraftTsv.write(spark.read.parquet(s"$sf/documents.parquet"), out, 8)
     out
   }
@@ -153,7 +153,7 @@ class GraftTsvSourceSpec extends AnyFunSuite {
   }
 
   test("null column values fail the write with the column name") {
-    val out = "/root/repo/target/scratch/gtsv_spec/nulls"
+    val out = graft.queries.QDef.scratch("gtsv_spec/nulls")
     val src = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
         org.apache.spark.sql.functions.when(col("doc_id") === 3L, null)
@@ -195,7 +195,7 @@ class GraftTsvSourceSpec extends AnyFunSuite {
     // (header zone map + size) catches it. A name-only fingerprint
     // waved this rewrite through and offsets silently remapped to the
     // new generation's data.
-    val out = "/root/repo/target/scratch/gtsv_spec/rewrite"
+    val out = graft.queries.QDef.scratch("gtsv_spec/rewrite")
     val src = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "lang", "source", "n_chars", "text")
     GraftTsv.write(src, out, 4)

@@ -13,7 +13,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    need different values, and then it is added here in review;
   *  - only `Stages.scala` (the write-once generation store) holds the
   *    `"_SUCCESS"` liveness literal or a 24 h millisecond constant, so
-  *    a second commit-and-prune path cannot grow back beside it.
+  *    a second commit-and-prune path cannot grow back beside it;
+  *  - every literal tag passed to a staging function has exactly one
+  *    call site, so each staged artifact has one builder, and the
+  *    `toDF("ok")` once-per-session latch lives only in
+  *    `bucketedTables` (layouts are `Staged.layout` generations).
+  * Under `src/test/scala` too, no string literal starts with the
+  * checkout's absolute path.
   *
   * Comment and scaladoc lines are skipped.
   */
@@ -80,6 +86,65 @@ class HarnessLintSpec extends AnyFunSuite {
       }
     }
 
+  private def isComment(l: String): Boolean = {
+    val t = l.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+  }
+
+  /** Openers of the staging calls whose first plain string literal
+    * argument is the staged tag.
+    */
+  private val StageCallRe =
+    """\b(?:Staged(?:\.disk|\.layout)?|diskKeyed|fixedStaged|stageAsFiles|stageAsPartitionedTree)\s*\(""".r
+
+  /** (tag, `file:line`) of every staging call in one file's text whose
+    * first argument list holds a plain (not interpolated) string
+    * literal; comment lines are blanked first.
+    */
+  private[graft] def stagedTags(baseName: String, content: String): Seq[(String, String)] = {
+    val text = content.split("\n", -1).map(l => if (isComment(l)) "" else l).mkString("\n")
+    StageCallRe.findAllMatchIn(text).flatMap { m =>
+      var (i, depth, tag) = (m.end, 1, Option.empty[String])
+      while (i < text.length && depth > 0 && tag.isEmpty) {
+        text(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case '"' =>
+            val close = text.indexOf('"', i + 1)
+            if (depth == 1 && !text(i - 1).isLetter) tag = Some(text.substring(i + 1, close))
+            i = close
+          case _ =>
+        }
+        i += 1
+      }
+      val line = text.substring(0, m.start).count(_ == '\n') + 1
+      tag.map(t => (t, s"$baseName:$line"))
+    }.toSeq
+  }
+
+  /** Tags staged at more than one call site across `files`. */
+  private[graft] def duplicateTags(files: Seq[(String, String)]): Seq[String] =
+    files.flatMap { case (n, c) => stagedTags(n, c) }.groupBy(_._1).toSeq.sortBy(_._1)
+      .collect { case (t, sites) if sites.size > 1 =>
+        s"tag $t staged at ${sites.map(_._2).mkString(", ")}" }
+
+  /** The member a line belongs to: the nearest preceding def, val or
+    * object at member indentation (two spaces at most), or QDef row.
+    */
+  private val MemberRe =
+    """^\s{0,2}(?:(?:private|protected)(?:\[\w+\])?\s+)?(?:def|val|lazy val|object)\s+(\w+)|^\s{0,4}QDef\("(\w+)"""".r
+
+  /** `toDF("ok")` marker latches outside `bucketedTables`. */
+  private[graft] def latchScan(baseName: String, content: String): Seq[String] = {
+    val lines = content.split("\n", -1)
+    lines.indices.filter(i => !isComment(lines(i)) && lines(i).contains("toDF(\"ok\")"))
+      .filterNot { i =>
+        (i to 0 by -1).iterator.flatMap(j => MemberRe.findFirstMatchIn(lines(j)))
+          .nextOption().exists(m => Option(m.group(1)).contains("bucketedTables"))
+      }
+      .map(i => s"$baseName:${i + 1}: marker latch outside bucketedTables")
+  }
+
   private def scalaFilesUnder(dir: java.io.File): Seq[java.io.File] =
     Option(dir.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
       .flatMap { f =>
@@ -141,5 +206,59 @@ class HarnessLintSpec extends AnyFunSuite {
       "Evil.scala:4: 24 h grace outside Stages",
       "Evil.scala:5: 24 h grace outside Stages"))
     assert(storeScan("Stages.scala", planted).isEmpty)
+  }
+
+  private def mainSources: Seq[(String, String)] =
+    scalaFilesUnder(new java.io.File(Root)).map { f =>
+      (f.getName, new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    }
+
+  test("main code: one call site per literal staged tag, one marker latch") {
+    val sources = mainSources
+    assert(sources.flatMap { case (n, c) => stagedTags(n, c) }.size > 40,
+      "the staged-tag scan found too few tags to mean anything")
+    val bad = duplicateTags(sources) ++ sources.flatMap { case (n, c) => latchScan(n, c) }
+    assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
+  }
+
+  test("planted duplicate tags and marker latches are caught") {
+    val a =
+      """object A {
+        |  // Staged.disk(s, dir, "dup") in a comment is fine
+        |  def x = graft.pipeline.Staged.disk(s, dir, "dup") { build(s) }
+        |  def y = Staged.diskKeyed(s, dir,
+        |    "keyed")(key(f("k"))) { b }
+        |  def z(tag: String) = Staged.disk(s, dir, tag)(b)
+        |  def w = StreamRuns.stageAsFiles(p1, s"2p-$tag-p1", 2, dir)
+        |  def v = StreamRuns.stageAsFiles(feed(s, "x"), "feed", 4, dir)
+        |  def u = Staged.layout(dir, "lay", "8", Seq(docs))(write(_))
+        |  def latch = Staged(s, dir, "latch") { s.range(1).toDF("ok") }
+        |}""".stripMargin
+    val b =
+      """object B {
+        |  private def bucketedTables(s: SparkSession) = {
+        |    Staged(s, dir, "bucketed_tables") {
+        |      def loc(t: String) = t
+        |      s.range(1).toDF("ok")
+        |    }
+        |  }
+        |  val all = Seq(
+        |    QDef("q", (s, dir) => Panels.fixedStaged(s, dir, "dup")(df, "k", 5)),
+        |    QDef("r", (s, dir) => { Staged(s, dir, "once"); s.range(1).toDF("ok") }))
+        |}""".stripMargin
+    assert(stagedTags("A.scala", a) === Seq("dup" -> "A.scala:3", "keyed" -> "A.scala:4",
+      "feed" -> "A.scala:8", "lay" -> "A.scala:9", "latch" -> "A.scala:10"))
+    assert(duplicateTags(Seq("A.scala" -> a, "B.scala" -> b)) ===
+      Seq("tag dup staged at A.scala:3, B.scala:9"))
+    assert(latchScan("A.scala", a) === Seq("A.scala:10: marker latch outside bucketedTables"))
+    assert(latchScan("B.scala", b) === Seq("B.scala:10: marker latch outside bucketedTables"))
+  }
+
+  test("test code: no repo-root literal") {
+    val bad = scalaFilesUnder(new java.io.File("src/test/scala")).flatMap { f =>
+      scan(f.getName, new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))._1
+        .filter(_.endsWith(": repo-root string literal"))
+    }
+    assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
   }
 }

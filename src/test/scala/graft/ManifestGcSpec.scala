@@ -30,7 +30,7 @@ class ManifestGcSpec extends AnyFunSuite {
     // Compaction preserved the snapshot: expired rows == live rows.
     assert(plan("expired")._2 === plan("live")._2)
 
-    val src = s"/root/repo/target/scratch/manifest_gc_${new File(sf).getName}"
+    val src = graft.queries.Relational.manifestGc(spark, sf)
     val dst = Files.createTempDirectory("gc-exec").toFile
     walk(new File(src)).foreach { f =>
       val rel = f.getPath.stripPrefix(s"$src/")

@@ -125,7 +125,7 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(viaManifest == want, "manifest read must be exactly the committed snapshot")
     // The naive directory scan sees the planted orphan too — the
     // failure mode the manifest protocol exists to prevent.
-    val dataDir = s"/root/repo/target/scratch/manifest_sink_${new java.io.File(sf).getName}/data"
+    val dataDir = s"${graft.queries.Relational.manifestSink(spark, sf)}/data"
     val naive = spark.read.parquet(dataDir).count()
     val total = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(naive == total, s"directory listing must include the orphan ($naive != $total)")

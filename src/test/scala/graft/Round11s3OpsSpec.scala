@@ -500,7 +500,7 @@ class Round11s3OpsSpec extends AnyFunSuite {
     assert(tt ++ inc == all, "v2 + delta != v3")
     assert(tt.nonEmpty && inc.nonEmpty)
     // Cumulative manifests: v1 c= v2 c= v3 as file lists.
-    val out = s"/root/repo/target/scratch/manifest_tt_sf0.001"
+    val out = graft.queries.Relational.manifestVersions(spark, sf)
     def files(v: Int) = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/manifest_v$v.txt")), "UTF-8")
       .split("\n").filter(_.nonEmpty).toSet
