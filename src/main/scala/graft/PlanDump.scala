@@ -11,9 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "the data side is slow" from "the plan side is slow".
   *
   * Usage: sbt "runMain graft.PlanDump <planDir> <suffix> <name1,name2,...> <sfDir>"
-  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_STAGERS (optional comma list run
-  * un-timed first, so phase timings measure the named queries, not
-  * shared staging). Exits 1 when any named query fails.
+  * Env: SPARK_GRAFT_CPUS. A staged family's shared build shows in the
+  * `build` time of its first query in `<names>`; list a first-toucher
+  * first to keep it out of the others. Exits 1 when any named query
+  * fails.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,11 +22,6 @@ object PlanDump {
       "usage: graft.PlanDump <planDir> <suffix> <name1,name2,...> <sfDir>")
     val Array(planDir, suffix, names, dir) = args
     val spark = SparkConfs.local(SparkConfs.cpus, "graft-plandump")
-    sys.env.get("SPARK_GRAFT_STAGERS").foreach(_.split(",").foreach { n =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, dir).count()
-      System.err.println(s"[plandump] stager $n: ${ms(t0)} ms")
-    })
     val failed = run(spark, dir, planDir, suffix,
       names.split(",").filter(_.nonEmpty).toSeq, SparkEntry.queries)
     spark.stop()

@@ -108,6 +108,23 @@ private[pipeline] object StageCache {
   */
 object Staged {
   private val cache = new ConcurrentHashMap[String, DataFrame]()
+  // Layout requests, keyed like the memo: a layout has no memo entry.
+  private val laidOut = ConcurrentHashMap.newKeySet[String]()
+
+  private def key(s: SparkSession, dir: String, tag: String): String =
+    s"${System.identityHashCode(s)}|$dir|$tag"
+
+  /** The tags requested in session `s` for input `dir`: the memo's keys
+    * (every [[apply]], [[disk]], [[diskKeyed]] and `Panels.fixedStaged`
+    * request) and every [[layout]] request. Kept per session and dropped
+    * with the session's entries by [[clear]].
+    */
+  def requested(s: SparkSession, dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val prefix = key(s, dir, "")
+    (cache.keySet.asScala ++ laidOut.asScala)
+      .collect { case k if k.startsWith(prefix) => k.stripPrefix(prefix) }.toSet
+  }
 
   // Cross-JVM cache observability: one hit/miss tick per spillThrough
   // generation lookup. The bench reports these so a reader can tell a
@@ -124,17 +141,17 @@ object Staged {
 
   def apply(s: SparkSession, dir: String, tag: String)(build: => DataFrame): DataFrame = {
     StageCache.hookCleanup(s)
-    val key = s"${System.identityHashCode(s)}|$dir|$tag"
+    val k = key(s, dir, tag)
     // Build OUTSIDE any map-mutating callback: builds nest (bucketedVecs
     // -> vecs, ivf_cents -> ivf_quant, cc_labels -> minhash_bands), and
     // a recursive computeIfAbsent on one ConcurrentHashMap can throw
     // "Recursive update" or livelock when the keys share a bin. Lost
     // races build twice and unpersist the loser — harmless.
-    val existing = cache.get(key)
+    val existing = cache.get(k)
     if (existing != null) existing
     else {
       val built = build.persist(StorageLevel.MEMORY_AND_DISK)
-      val prev = cache.putIfAbsent(key, built)
+      val prev = cache.putIfAbsent(k, built)
       if (prev != null) {
         try built.unpersist(false) catch { case _: Throwable => () }
         prev
@@ -389,10 +406,14 @@ object Staged {
     * data. `write(tmp)` fills the store's temp sibling, which gets a
     * `_SUCCESS` if the writer left none. Layouts are read-only once
     * committed and must not embed their own path; tags share
-    * [[spillThrough]]'s namespace and prune-prefix rule.
+    * [[spillThrough]]'s namespace and prune-prefix rule. The request
+    * is recorded for the frames' session (see [[requested]]).
     */
   def layout(dir: String, tag: String, kind: String, frames: Seq[DataFrame])(
       write: String => Unit): String = {
+    val s = frames.head.sparkSession
+    StageCache.hookCleanup(s)
+    laidOut.add(key(s, dir, tag))
     val planFp = frames.map(f => planFingerprint(f.queryExecution.logical)).mkString("_")
     generation(diskStore, scaleRoot(dir), s"$tag-$kind-", planFp, dir) { tmp =>
       write(tmp)
@@ -503,13 +524,14 @@ object Staged {
     }
   }
 
-  /** Drop (and best-effort unpersist) every memo entry whose key starts
-    * with `prefix` ("{identityHashCode}|" drops one session's entries;
-    * "" drops all). Wired to application end by
-    * [[StageCache.hookCleanup]] so stopped-session DataFrames don't
-    * accumulate in a long-lived JVM.
+  /** Drop (and best-effort unpersist) every memo entry, and every
+    * recorded layout request, whose key starts with `prefix`
+    * ("{identityHashCode}|" drops one session's entries; "" drops all).
+    * Wired to application end by [[StageCache.hookCleanup]] so
+    * stopped-session DataFrames don't accumulate in a long-lived JVM.
     */
   def clear(prefix: String = ""): Unit = {
+    laidOut.removeIf((k: String) => k.startsWith(prefix))
     val it = cache.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
@@ -521,21 +543,6 @@ object Staged {
   }
 }
 
-/** Fixed evaluation/probe panels — the ONE way the repo caps a frame
-  * to a literal size. Every eval set, probe set, and truth-arm sample
-  * is a FIXED panel: its row count is a literal constant at any corpus
-  * scale, because an eval set is fixed-size by design and a bare
-  * 1-in-N sample grows with the corpus (the round-12 canary-panel
-  * lesson — a "small" sampled side pinned to broadcast is a deferred
-  * OOM at 100 TB). `orderBy(key).limit(k)` plans as TakeOrdered: the
-  * structural shape BnljGuardSpec and BroadcastHintGuardSpec certify
-  * without any allowlist claim, and when the panel is disk-staged the
-  * recorded build plan (Staged.buildPlanFor) carries the same limit,
-  * so the artifact's read-back leaf is certified by construction too.
-  * Residue-class pre-filters (pmod(key, N) = r) stay at the call site:
-  * they are part of each query's oracle-replayed semantics, not of the
-  * cap.
-  */
 /** Registry of plans executed as SIDE EFFECTS during query
   * construction (a write the builder performs eagerly, e.g.
   * pipeline_batch_envelope's JSONL batch-file write). The three scale
@@ -608,6 +615,21 @@ object EagerWrites {
   }
 }
 
+/** Fixed evaluation/probe panels — the ONE way the repo caps a frame
+  * to a literal size. Every eval set, probe set, and truth-arm sample
+  * is a FIXED panel: its row count is a literal constant at any corpus
+  * scale, because an eval set is fixed-size by design and a bare
+  * 1-in-N sample grows with the corpus (the round-12 canary-panel
+  * lesson — a "small" sampled side pinned to broadcast is a deferred
+  * OOM at 100 TB). `orderBy(key).limit(k)` plans as TakeOrdered: the
+  * structural shape BnljGuardSpec and BroadcastHintGuardSpec certify
+  * without any allowlist claim, and when the panel is disk-staged the
+  * recorded build plan (Staged.buildPlanFor) carries the same limit,
+  * so the artifact's read-back leaf is certified by construction too.
+  * Residue-class pre-filters (pmod(key, N) = r) stay at the call site:
+  * they are part of each query's oracle-replayed semantics, not of the
+  * cap.
+  */
 object Panels {
 
   /** The k lowest-`key` rows of `df` — deterministic (key must be

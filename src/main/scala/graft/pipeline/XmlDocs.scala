@@ -94,24 +94,29 @@ object XmlDocs {
         .as("indexing"))
   }
 
-  /** Flatten the nested model to the pipeline's per-document scalar view
-    * (Classify/Graph operate on this + exploded triples).
+  /** Flatten the nested model to the pipeline's scalar view
+    * (Classify/Graph operate on this + exploded triples): one row per
+    * document × author × recipient, so every author and recipient gets
+    * its Person node and edge. explode_outer keeps one null row for an
+    * empty or missing list, like the reference's loop over present
+    * entities; Graph dedups the repeated per-document nodes.
     */
   def toFlatDocs(docs: DataFrame): DataFrame =
-    docs.select(
-      col("documentID"),
-      col("documentTitle"),
-      col("projectInfo.publicationName").as("publicationName"),
-      col("projectInfo.seriesName").as("seriesName"),
-      col("projectInfo.volumeInfo").as("volumeInfo"),
-      col("projectInfo.publisher").as("publisher"),
-      // get() (not [0]) — ANSI mode errors on out-of-bounds for empty
-      // author/recipient lists; get returns null like the reference's loop
-      get(col("authors"), lit(0)).getField("name").as("author"),
-      get(col("recipients"), lit(0)).getField("name").as("recipient"),
-      col("location.name").as("loc"),
-      col("dates.`date-from`").as("date_from"),
-      col("dates.`date-to`").as("date_to"))
+    docs
+      .withColumn("author", explode_outer(col("authors.name")))
+      .withColumn("recipient", explode_outer(col("recipients.name")))
+      .select(
+        col("documentID"),
+        col("documentTitle"),
+        col("projectInfo.publicationName").as("publicationName"),
+        col("projectInfo.seriesName").as("seriesName"),
+        col("projectInfo.volumeInfo").as("volumeInfo"),
+        col("projectInfo.publisher").as("publisher"),
+        col("author"),
+        col("recipient"),
+        col("location.name").as("loc"),
+        col("dates.`date-from`").as("date_from"),
+        col("dates.`date-to`").as("date_to"))
 
   /** Exploded per-document index triples from the nested model. */
   def toTriples(docs: DataFrame): DataFrame =

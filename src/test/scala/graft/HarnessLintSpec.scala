@@ -35,8 +35,7 @@ class HarnessLintSpec extends AnyFunSuite {
     "SPARK_GRAFT_SF_DIR", // Bench's scale-factor directory
     "SPARK_GRAFT_STAGECACHE", // stage-cache path
     "SPARK_GRAFT_STREAM_SCRATCH", // stream scratch path
-    "SPARK_GRAFT_ONLY", // Bench's dev subset filter
-    "SPARK_GRAFT_STAGERS") // PlanDump's un-timed stagers
+    "SPARK_GRAFT_ONLY") // Bench's dev subset filter
 
   private val BuilderRe = """SparkSession\s*\.\s*builder\b""".r
   private val EnvRefRe = """\bsys\.env\b|\bSystem\.getenv\b""".r

@@ -223,4 +223,22 @@ class XmlPipelineSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(inGraph == Seq(("Person", inJson.head._2)))
   }
+
+  test("graph: every author has a Person node and an AUTHOR edge") {
+    val out = java.nio.file.Files.createTempDirectory("graft-xml-out").toString
+    new Engine(spark, mock).run(fixtureFile(twoAuthorsXml), out)
+    val inJson = spark.read.json(s"$out/documents")
+      .select(explode(col("authors")).as("a")).select("a.name", "a.uri").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    // Names as convert_name gives them (its "de" quirk mangles Hamilton).
+    assert(inJson.size == 2 && inJson.map(_._1).contains("Thomas Jefferson"))
+    val persons = spark.read.parquet(s"$out/nodes").filter(col("label") === "Person")
+      .select("key", "uri").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(inJson.subsetOf(persons))
+    val authorSrcs = spark.read.parquet(s"$out/edges")
+      .filter(col("type") === "AUTHOR" && col("dst") === "d3")
+      .select("src").collect().map(_.getString(0)).toSet
+    assert(authorSrcs == inJson.map(_._2))
+  }
 }

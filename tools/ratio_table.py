@@ -29,7 +29,9 @@ MIN_ORACLE_S = 0.25
 # hit-only records (r13 29.8 s / r15-fast 28.5 s vs r15-slow 52.2 s vs
 # the r15 driver record's 91.4 s). Only valid when misses == 0 —
 # a miss means staging includes recompute and says nothing about the
-# environment.
+# environment. The bands were fitted on records from Bench's old
+# hand-kept stager set; the derived stagers pre-build more tags, so
+# staging_sec reads higher on the same box until they are refitted.
 STAGING_FAST_MAX_S = 35.0
 STAGING_SLOW_MAX_S = 65.0
 
