@@ -27,6 +27,17 @@ import graft.pipeline.{Classify, Graph, NestedEnrich, XmlDocs}
   *     documents JSON, and the graph is built from its labels
   *     ([[NestedEnrich.labeledTriples]]), so the classify chain runs
   *     once and the graph carries exactly the documents' labels;
+  *   - inside the enrich plan each step is referenced once: one label
+  *     vocabulary ([[NestedEnrich.vocabulary]]: one scan, one
+  *     groupBy(norm), the classifier called once on the distinct
+  *     unknown terms), one lookup join of every index slot and one
+  *     re-nest per document. Persisting the inputs does not make a
+  *     repeated subtree run once: Spark's AQE does not reuse an
+  *     exchange above a cached relation (a self-join of one aggregate
+  *     gives a ReusedExchange over a parquet scan and two
+  *     ShuffleQueryStages over the same scan persisted; EnrichPlanSpec
+  *     pins both), and a classifier referenced once per lookup join
+  *     would be called once per lookup join;
   *   - row counts are observed on the writes themselves
   *     (`Dataset.observe`), not read back.
   * Both caches live for one batch and are dropped in a `finally`, also

@@ -67,10 +67,33 @@ final class BatchClassifier(
     sleeper: Long => Unit = Thread.sleep) extends Classify.Classifier with Serializable {
 
   override def classify(norms: DataFrame): DataFrame = {
-    val (t, bs, mp, mr, sl) = (transport, batchSize, maxPollAttempts, maxRetries, sleeper)
     val session = norms.sparkSession
     import session.implicits._
-    norms.select("norm").as[String].mapPartitions { it =>
+    val label = labeler
+    norms.select("norm").as[String].mapPartitions(label).toDF("norm", "type")
+  }
+
+  /** One pass over `vocab`: known entities pass through, and only the
+    * other norms are batched to the service.
+    */
+  override def labelVocabulary(vocab: DataFrame): DataFrame = {
+    val session = vocab.sparkSession
+    import session.implicits._
+    val label = labeler
+    vocab.select("norm", "entity").as[(String, String)].mapPartitions { it =>
+      val (known, unknown) = it.partition(_._2 != null)
+      known.map { case (n, e) => (n, e, true) } ++
+        label(unknown.map(_._1)).map { case (n, t) => (n, t, false) }
+    }.toDF("norm", "type", "known")
+  }
+
+  /** The per-partition client loop over a stream of norms. Built from
+    * the constructor arguments alone, so the closure serializes without
+    * this instance.
+    */
+  private def labeler: Iterator[String] => Iterator[(String, String)] = {
+    val (t, bs, mp, mr, sl) = (transport, batchSize, maxPollAttempts, maxRetries, sleeper)
+    it => {
       val tr = t()
       it.grouped(bs).flatMap { chunk =>
         var attempt = 0
@@ -102,6 +125,6 @@ final class BatchClassifier(
         result.getOrElse(throw new IllegalStateException(
           s"batch job still failed after $mr resubmissions"))
       }
-    }.toDF("norm", "type")
+    }
   }
 }

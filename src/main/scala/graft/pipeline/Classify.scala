@@ -25,6 +25,19 @@ object Classify {
     */
   trait Classifier {
     def classify(norms: DataFrame): DataFrame
+
+    /** Labels a vocabulary (`norm`, `entity`), where `entity` is the
+      * norm's known-entity type or null, as the label table
+      * (`norm`, `type`, `known`): a known entity keeps its entity type,
+      * and only the other norms reach [[classify]] (a norm it gives no
+      * label is left out). This default reads `vocab` twice, once per
+      * branch of a union; a classifier that can label row by row
+      * overrides it to read `vocab` once.
+      */
+    def labelVocabulary(vocab: DataFrame): DataFrame =
+      labelTable(
+        vocab.filter(col("entity").isNotNull).select(col("norm"), col("entity").as("type")),
+        classify(vocab.filter(col("entity").isNull).select("norm")))
   }
 
   /** Deterministic, engine-portable rule classifier: labels by an
@@ -45,6 +58,13 @@ object Classify {
 
     override def classify(norms: DataFrame): DataFrame =
       norms.select(col("norm"), labelExpr(col("norm")).as("type"))
+
+    override def labelVocabulary(vocab: DataFrame): DataFrame = {
+      val known = col("entity").isNotNull
+      vocab.select(col("norm"),
+        when(known, col("entity")).otherwise(labelExpr(col("norm"))).as("type"),
+        known.as("known"))
+    }
   }
 
   /** test_mode replay (json_classification.py:11-37,104-110): a recorded
@@ -134,56 +154,57 @@ object Classify {
           SELECT 1 FROM known
           WHERE known.norm = lower(trim(regexp_replace(t.term, '\\s+', ' ', 'g'))))))"""
 
-  /** O20-O21 label precedence (json_classification.py:258-264) applied
-    * to the per-document triples:
-    *   - main: known-entities first, else the API map, else 'term';
-    *   - midsub/sub: API map only (never known), 'term' when empty —
-    *     so a midsub that IS a known entity still labels 'term',
-    *     because known terms were pruned from the API input (§2.3-4);
-    *   - person-labeled terms get convert_name applied (O21).
-    * Both maps are bounded by the distinct-term count — a VOCABULARY
-    * bound that grows with the corpus, so neither carries a broadcast
-    * hint (repo policy: AQE broadcasts them while they fit and
-    * shuffles the joins on the norm key at scale; the reference's
-    * equivalent in-memory dicts are the thing that would not survive
-    * 100 TB). The fact table streams through codegen'd joins either
-    * way.
+  /** The label table (`norm`, `type`, `known`) of a known-entity map
+    * and the classifier's map over the other terms ([[apiMap]]): one
+    * row per norm, as [[Classifier.labelVocabulary]] gives it.
+    */
+  def labelTable(known: DataFrame, api: DataFrame): DataFrame =
+    known.select(col("norm"), col("type"), lit(true).as("known"))
+      .unionByName(api.select(col("norm"), col("type"), lit(false).as("known")))
+
+  /** O20 label precedence (json_classification.py:258-264) of one index
+    * slot whose `term` found the label-table row (`label`, `known`),
+    * both null on a miss:
+    *   - main: known entity first, else the classifier, else 'term';
+    *   - midsub/sub: the classifier only, 'term' when empty — so a
+    *     midsub that IS a known entity still labels 'term', because
+    *     known terms never reach the classifier (§2.3-4).
+    * The one definition both the flat ([[labelTriples]]) and the
+    * nested (`NestedEnrich.enrich`) paths label with.
+    */
+  def slotLabel(isMain: Column, term: Column, label: Column, known: Column): Column =
+    when(!isMain && (term.isNull || term === "" || known), lit("term"))
+      .otherwise(lower(coalesce(label, lit("term"))))
+
+  /** O21: person-labeled terms get convert_name applied. */
+  def convertIfPerson(term: Column, label: Column): Column =
+    when(label === "person", ConvertNameExpr.convertNameNative(term)).otherwise(term)
+
+  /** O20-O21 applied to the per-document triples: each of main, midsub
+    * and sub looks its norm up in the one `known ∪ api` label table
+    * ([[labelTable]]) and is labeled by [[slotLabel]]. The table is
+    * bounded by the distinct-term count — a VOCABULARY bound that grows
+    * with the corpus, so it carries no broadcast hint (repo policy: AQE
+    * broadcasts it while it fits and shuffles the lookups on the norm
+    * key at scale; the reference's equivalent in-memory dicts are the
+    * thing that would not survive 100 TB). The fact table streams
+    * through codegen'd joins either way.
     */
   def labelTriples(triples: DataFrame, known: DataFrame, api: DataFrame): DataFrame = {
-    val k = known.withColumnRenamed("type", "k_type")
-    val a = api.withColumnRenamed("type", "a_type")
-    def normed(c: String) = Text.normTerm(col(c))
-    def convertIfPerson(term: Column, label: Column): Column =
-      when(label === "person", ConvertNameExpr.convertNameNative(term)).otherwise(term)
-
-    val mainLab = coalesce(col("k_type"), col("a_type"), lit("term"))
-    val withMain = triples
-      .join(k, normed("main") === k("norm"), "left_outer").drop("norm")
-      .join(a, normed("main") === a("norm"), "left_outer").drop("norm")
-      .withColumn("main_type", lower(mainLab))
-      .drop("k_type", "a_type")
-
-    def subLabel(field: String)(df: DataFrame): DataFrame = {
-      val a2 = api.withColumnRenamed("type", "s_type")
-      df.join(a2, normed(field) === a2("norm"), "left_outer").drop("norm")
-        .withColumn(s"${field}_type",
-          when(col(field).isNull || col(field) === "", lit("term"))
-            .otherwise(lower(coalesce(col("s_type"), lit("term")))))
-        .drop("s_type")
+    val table = labelTable(known, api)
+    val labeled = Seq("main", "midsub", "sub").foldLeft(triples) { (df, f) =>
+      val t = table.select(col("norm").as(s"${f}_norm"),
+        col("type").as(s"${f}_label"), col("known").as(s"${f}_known"))
+      df.join(t, Text.normTerm(col(f)) === t(s"${f}_norm"), "left_outer")
+        .withColumn(s"${f}_type", slotLabel(lit(f == "main"), col(f),
+          col(s"${f}_label"), col(s"${f}_known")))
     }
-
-    val labeled = subLabel("sub")(subLabel("midsub")(withMain))
-    // Pass every non-triple input column through (e.g. the position key
-    // the nested re-nest path needs for document-order fidelity).
+    // Pass every non-triple input column through.
     val passthrough = triples.columns
       .filterNot(Set("main", "midsub", "sub")).toSeq.map(col)
-    labeled.select(passthrough ++ Seq(
-      convertIfPerson(col("main"), col("main_type")).as("main"),
-      col("main_type"),
-      convertIfPerson(col("midsub"), col("midsub_type")).as("midsub"),
-      col("midsub_type"),
-      convertIfPerson(col("sub"), col("sub_type")).as("sub"),
-      col("sub_type")): _*)
+    labeled.select(passthrough ++ Seq("main", "midsub", "sub").flatMap(f => Seq(
+      convertIfPerson(col(f), col(s"${f}_type")).as(f),
+      col(s"${f}_type"))): _*)
   }
 
   /** DuckDB CTE equivalent of [[labelTriples]] on the synthetic corpus

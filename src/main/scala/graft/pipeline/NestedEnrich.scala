@@ -12,73 +12,94 @@ import graft.functions.{ConvertNameExpr, Text}
   * generate_uri.py:29-67) with immutable typed DataFrames.
   *
   * Index order inside each document is load-bearing (first-wins dedup,
-  * §2.3-3): the rebuild goes posexplode -> label joins -> re-nest via
-  * array_sort on the position key, so the enriched array is in the
-  * original document order even though the joins shuffle.
+  * §2.3-3): the rebuild explodes every index slot with its entry
+  * position, looks the slots up, and re-nests via array_sort on the
+  * (position, slot) key, so the enriched array is in the original
+  * document order even though the lookup shuffles.
   */
 object NestedEnrich {
 
   private val termObjDdl = "term STRING, type STRING"
   private val termObjUriDdl = "term STRING, type STRING, uri STRING"
 
-  /** Known-entity harvest from the nested model (O13). Single-pass
-    * multi-emit over one scan of the nested docs — per-arm unions would
-    * re-execute the nested-model build (join + collect_list) per arm.
+  /** The label table (`norm`, `type`, `known`) of a document model.
+    * One scan and one groupBy(norm) harvest the known entities and the
+    * distinct index-term norms together (O13-O15,
+    * json_classification.py:313-320): authors and recipients are
+    * 'person', the location 'place', and 'place' wins a collision,
+    * since the reference writes the location last. The classifier then
+    * labels the term norms that are not known entities, each once (O17,
+    * json_classification.py:160-192). Only norms some index slot looks
+    * up are kept: every main, and each midsub/sub that is not empty.
     */
-  def knownEntities(docs: DataFrame): DataFrame =
-    docs.select(explode(concat(
-        transform(col("authors"), a =>
-          struct(Text.normTerm(a.getField("name")).as("norm"),
-            lit("person").as("type"))),
-        transform(col("recipients"), r =>
-          struct(Text.normTerm(r.getField("name")).as("norm"),
-            lit("person").as("type"))),
-        when(col("location").isNotNull,
-          array(struct(Text.normTerm(col("location.name")).as("norm"),
-            lit("place").as("type"))))
-          .otherwise(array().cast("array<struct<norm: string, type: string>>"))))
-        .as("x"))
-      .select(col("x.norm").as("norm"), col("x.type").as("type"))
-      .groupBy("norm").agg(max(col("type")).as("type"))
+  def vocabulary(docs: DataFrame, classifier: Classify.Classifier): DataFrame = {
+    // One row per mention, flagged by role. Boolean flags, not type
+    // strings, keep the max() aggregate a hash aggregate.
+    def mentions(terms: Column, role: String): Column =
+      transform(terms, t => struct(Text.normTerm(t).as("norm"),
+        lit(role == "person").as("person"), lit(role == "place").as("place"),
+        lit(role == "slot").as("slot")))
+    val slotTerms = concat(
+      transform(col("indexing"), _.getField("main")),
+      filter(concat(transform(col("indexing"), _.getField("midsub")),
+        transform(col("indexing"), _.getField("sub"))), _ =!= ""))
+    val vocab = docs.select(explode(concat(
+        mentions(col("authors.name"), "person"),
+        mentions(col("recipients.name"), "person"),
+        mentions(when(col("location").isNotNull, array(col("location.name")))
+          .otherwise(array().cast("array<string>")), "place"),
+        mentions(slotTerms, "slot"))).as("x"))
+      .select("x.*")
+      .filter(col("norm").isNotNull)
+      .groupBy("norm")
+      .agg(max(col("person")).as("person"), max(col("place")).as("place"),
+        max(col("slot")).as("slot"))
+      .filter(col("slot"))
+      .select(col("norm"),
+        when(col("place"), lit("place")).when(col("person"), lit("person")).as("entity"))
+    classifier.labelVocabulary(vocab)
+  }
 
-  /** B1 -> B2: classify index terms, apply label precedence, convert
-    * person names (authors/recipients always), rebuild `indexing` as
-    * typed term objects.
-    *
-    * `maps` optionally supplies already-staged (known, api) lookup
-    * tables (their content is invariant between the nested and flat
-    * corpus views — same entity fields, same distinct term set), so a
-    * session that staged the flat pipeline does not re-derive the
-    * classify chain here.
+  /** B1 -> B2: label every index slot, convert person names
+    * (authors/recipients always), rebuild `indexing` as typed term
+    * objects. Each step runs once per call: the label table
+    * ([[vocabulary]], or `labels` when the caller already staged one,
+    * e.g. [[Classify.labelTable]] over the flat pipeline's maps — their
+    * content is the same for the nested and flat corpus views), one
+    * lookup join of every (main, midsub, sub) slot against it with
+    * [[Classify.slotLabel]], and one re-nest per document.
     */
   def enrich(docs: DataFrame, classifier: Classify.Classifier,
-      maps: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val known = maps.map(_._1).getOrElse(knownEntities(docs))
-    val triples = docs
+      labels: Option[DataFrame] = None): DataFrame = {
+    val table = labels.getOrElse(vocabulary(docs, classifier))
+    val slots = docs
       .select(col("documentID"), posexplode(col("indexing")))
-      .select(col("documentID"), col("pos"),
-        col("col.main").as("main"),
-        col("col.midsub").as("midsub"),
-        col("col.sub").as("sub"))
-    val api = maps.map(_._2).getOrElse(
-      Classify.apiMap(Classify.allTerms(triples), known, classifier))
-    val labeled = Classify.labelTriples(triples, known, api)
+      .select(col("documentID"), col("pos"), posexplode(array(
+        col("col.main"), col("col.midsub"), col("col.sub"))).as(Seq("slot", "term")))
+    val looked = slots
+      .join(table, Text.normTerm(col("term")) === table("norm"), "left_outer")
+      .select(col("documentID"), col("pos"), col("slot"), col("term"),
+        Classify.slotLabel(col("slot") === 0, col("term"), col("type"), col("known"))
+          .as("label"))
+      .select(col("documentID"), struct(col("pos"), col("slot"),
+        Classify.convertIfPerson(col("term"), col("label")).as("term"),
+        col("label").as("type")).as("s"))
 
-    def subObj(f: String): Column =
-      when(col(f) =!= "",
-        struct(col(f).as("term"), col(s"${f}_type").as("type")))
+    // Sorted on (pos, slot), entry i's main, midsub and sub are slots
+    // 3i, 3i+1 and 3i+2.
+    def subObj(s: Column): Column =
+      when(s.getField("term") =!= "",
+        struct(s.getField("term").as("term"), s.getField("type").as("type")))
         .otherwise(lit(null).cast(s"struct<$termObjDdl>"))
-
-    val objs = labeled.select(col("documentID"), col("pos"),
-      struct(
-        col("main").as("term"),
-        col("main_type").as("type"),
-        subObj("midsub").as("midsub"),
-        subObj("sub").as("sub")).as("obj"))
+    val objs = looked
       .groupBy("documentID")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("obj")))),
-        x => x.getField("obj")).as("indexing_enriched"))
+      .agg(array_sort(collect_list(col("s"))).as("slots"))
+      .select(col("documentID"),
+        transform(filter(col("slots"), _.getField("slot") === 0), (m, i) => struct(
+          m.getField("term").as("term"),
+          m.getField("type").as("type"),
+          subObj(col("slots").getItem(i * 3 + 1)).as("midsub"),
+          subObj(col("slots").getItem(i * 3 + 2)).as("sub"))).as("indexing_enriched"))
 
     docs.drop("indexing")
       .join(objs, Seq("documentID"), "left_outer")

@@ -19,11 +19,15 @@ import org.apache.spark.storage.StorageLevel
   * graph build — reuses it.
   *
   * This is also load-bearing *within* a single query: labelTriples
-  * broadcasts the api map three times (main/midsub/sub joins) under
-  * different aliases, and aliased broadcast exchanges are not
-  * deduplicated by exchange reuse — without persistence each broadcast
-  * re-executes the whole distinct-classify subplan, and the graph
-  * queries were paying the chain 3-4x each.
+  * looks the label table up three times (main/midsub/sub), and Spark
+  * shares none of those subtrees: the inputs here are cached, and
+  * under AQE an exchange above a cached relation is not reused even
+  * where the subtrees are the same (the self-join of one
+  * `groupBy(k).count()` gives a ReusedExchange over a parquet scan and
+  * two ShuffleQueryStages over the same scan persisted; EnrichPlanSpec
+  * pins both). Without persistence each lookup re-executes the whole
+  * distinct-classify subplan, and the graph queries were paying the
+  * chain 3-4x each.
   *
   * Scale posture (100 TB): `known`/`api` are dimension-sized (bounded by
   * the distinct entity/term count — the reference's own premise when it
@@ -55,10 +59,10 @@ object Stages {
     def p(tag: String)(build: => DataFrame): DataFrame = Staged.disk(s, dir, tag)(build)
     val docs = p("pl_docs")(Corpus.flatDocs(s, dir))
     val triples = p("pl_triples")(Corpus.indexTriples(s, dir))
-    // Persisted because NestedEnrich.enrich references it TWICE (the
-    // posexplode source and the final doc re-join) — Spark shares no
-    // common subtrees, so unpersisted the nest groupBy+collect_list
-    // shuffle runs twice per enrich plan.
+    // Persisted because NestedEnrich.enrich references it more than
+    // once (the slot explode and the final doc re-join) — Spark shares
+    // no common subtrees, so unpersisted the nest groupBy+collect_list
+    // shuffle runs once per reference.
     val nested = p("pl_nested")(Corpus.nestedDocsFrom(docs, triples))
     val known = p("pl_known")(Classify.knownEntities(docs))
     // The distinct-term set feeds both the classify map and the batch

@@ -266,7 +266,7 @@ object Pipeline {
         val st = stages(s, dir)
         val b3 = NestedEnrich.addUris(
           NestedEnrich.enrich(st.nested, Classify.RuleClassifier,
-            maps = Some((st.known, st.api))))
+            labels = Some(Classify.labelTable(st.known, st.api))))
         b3.select(col("documentID"), explode(col("indexing")).as("t"))
           .select(col("documentID"),
             col("t.term").as("term"), col("t.type").as("type"),

@@ -6,8 +6,26 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Corpus, XmlDocs}
+import graft.functions.Text
+import graft.pipeline.{BatchClassifier, BatchClient, Classify, Corpus, NestedEnrich, Stages, XmlDocs}
 import graft.streaming.StreamRuns
+
+/** The rule transport, recording every term submitted to it. */
+object RecordingTransport {
+  val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  def make(): BatchClient.Transport = {
+    val rule = BatchClient.ruleTransport()
+    new BatchClient.Transport {
+      override def submit(batch: Seq[String]): String = {
+        batch.foreach(received.add)
+        rule.submit(batch)
+      }
+      override def status(jobId: String): String = rule.status(jobId)
+      override def fetch(jobId: String): Seq[(String, String)] = rule.fetch(jobId)
+    }
+  }
+}
 
 /** The user-facing Engine facade end-to-end on reference-shaped XML:
   * batch run produces documents + graph, re-run is idempotent, its
@@ -146,5 +164,57 @@ class EngineSpec extends AnyFunSuite {
     q.exception.foreach(e => throw e)
     assert(q.recentProgress.count(_.numInputRows > 0) == 2)
     assert(termsOf(incOut) == Seq(("Knox, Henry", "term")))
+  }
+
+  test("enrich over the staged corpus equals its staged-label path and labels") {
+    val st = Stages(spark, sf)
+    val rule = Classify.RuleClassifier
+    val enriched = NestedEnrich.enrich(st.nested, rule)
+    assert(rowSet(enriched) == rowSet(NestedEnrich.enrich(st.nested, rule,
+      labels = Some(Classify.labelTable(st.known, st.api)))))
+    assert(rowSet(NestedEnrich.labeledTriples(enriched)) == rowSet(st.labeled))
+  }
+
+  /** The distinct normalized index terms of the XML at `path` that are
+    * not known entities: what one batch over it should classify.
+    */
+  private def unknownNorms(path: String): Set[String] = {
+    val docs = new Engine(spark).ingest(path)
+    val triples = XmlDocs.toTriples(docs)
+    val slots = triples.select(col("main").as("term")).union(triples
+      .select(explode(array(col("midsub"), col("sub"))).as("term"))
+      .filter(col("term") =!= ""))
+    val known = Classify.knownEntities(XmlDocs.toFlatDocs(docs))
+      .select("norm").collect().map(_.getString(0)).toSet
+    slots.select(Text.normTerm(col("term"))).distinct()
+      .collect().map(_.getString(0)).toSet -- known
+  }
+
+  private def submitted(): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    RecordingTransport.received.asScala.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+  }
+
+  test("run and each micro-batch submit each unknown norm to the classifier once") {
+    val files = stageXmlFiles("engine-classify-once")
+    val in = StreamRuns.fresh("engine-classify-once-in")
+    val perFile = files.map { f =>
+      val moved = Files.move(f, Path.of(in, f.getFileName.toString))
+      unknownNorms(moved.toString)
+    }
+    val engine = new Engine(spark,
+      new BatchClassifier(() => RecordingTransport.make(), sleeper = _ => ()))
+
+    RecordingTransport.received.clear()
+    engine.run(in, StreamRuns.fresh("engine-classify-once-batch"))
+    assert(submitted() == unknownNorms(in).map(_ -> 1).toMap)
+
+    RecordingTransport.received.clear()
+    val out = StreamRuns.fresh("engine-classify-once-inc")
+    val q = engine.runIncremental(in, out, s"$out/_ckpt", filesPerTrigger = 1)
+    q.awaitTermination()
+    q.exception.foreach(e => throw e)
+    assert(q.recentProgress.count(_.numInputRows > 0) == files.size)
+    assert(submitted() == perFile.flatten.groupMapReduce(identity)(_ => 1)(_ + _))
   }
 }

@@ -58,7 +58,13 @@ class XmlPipelineSpec extends AnyFunSuite {
     "committees" -> "place", // midsub classified 'place' -> uri, still a Term node
     "virginia" -> "place",
     "reports" -> "term",
-    "taxes" -> "term"))
+    "taxes" -> "term",
+    "army" -> "organization",
+    "wayne, anthony" -> "person",
+    "greene, nathanael" -> "person",
+    // known entities in casesXml: never asked, so never these labels
+    "knox, henry" -> "organization",
+    "boston" -> "organization"))
     // note: "new york" is a KNOWN entity (location) -> pruned from the
     // classifier input; as a midsub it must STILL label 'term' (§2.3-4)
 
@@ -133,11 +139,14 @@ class XmlPipelineSpec extends AnyFunSuite {
   }
 
   private lazy val flatDocs = XmlDocs.toFlatDocs(docModel)
+  /** The flat path's (known, api) maps: the staged pipeline's labels. */
+  private def maps(docs: org.apache.spark.sql.DataFrame) = {
+    val known = Classify.knownEntities(XmlDocs.toFlatDocs(docs))
+    (known, Classify.apiMap(Classify.allTerms(XmlDocs.toTriples(docs)), known, mock))
+  }
   private def labeledOf(docs: org.apache.spark.sql.DataFrame) = {
-    val triples = XmlDocs.toTriples(docs)
-    val known = NestedEnrich.knownEntities(docs)
-    val api = Classify.apiMap(Classify.allTerms(triples), known, mock)
-    Classify.labelTriples(triples, known, api)
+    val (known, api) = maps(docs)
+    Classify.labelTriples(XmlDocs.toTriples(docs), known, api)
   }
   private lazy val labeled = labeledOf(docModel)
 
@@ -240,5 +249,67 @@ class XmlPipelineSpec extends AnyFunSuite {
       .filter(col("type") === "AUTHOR" && col("dst") === "d3")
       .select("src").collect().map(_.getString(0)).toSet
     assert(authorSrcs == inJson.map(_._2))
+  }
+
+  /** The enrich cases the etlbench corpus never reaches (no index term
+    * there names a known entity): entries out of alphabetical order, a
+    * known author and place as main, midsub and sub, classifier-typed
+    * persons as midsub and sub, empty midsub/sub, and a document with
+    * no index terms.
+    */
+  private val casesXml =
+    """<root>
+      |<document>
+      |  <documentID>d4</documentID>
+      |  <documentTitle>Letter Four</documentTitle>
+      |  <authors><author>Knox, Henry</author></authors>
+      |  <location><placeName>Boston</placeName></location>
+      |  <indexing>
+      |    <indexTerm><main>war</main><midsub>Wayne, Anthony</midsub><sub>Greene, Nathanael</sub></indexTerm>
+      |    <indexTerm><main>Knox, Henry</main></indexTerm>
+      |    <indexTerm><main>army</main><midsub>Knox, Henry</midsub><sub>Boston</sub></indexTerm>
+      |    <indexTerm><main>Boston</main><midsub>taxes</midsub></indexTerm>
+      |  </indexing>
+      |</document>
+      |<document>
+      |  <documentID>d5</documentID>
+      |  <documentTitle>Letter Five</documentTitle>
+      |  <authors><author>Knox, Henry</author></authors>
+      |  <indexing></indexing>
+      |</document>
+      |</root>
+      |""".stripMargin
+
+  private lazy val casesModel =
+    XmlDocs.toDocModel(XmlDocs.read(spark, fixtureFile(casesXml))).cache()
+
+  /** Index entries as (term, type, midsub (term, type), sub (term, type)). */
+  private def entries(enriched: org.apache.spark.sql.DataFrame, docId: String) = {
+    def obj(r: Row) = Option(r).map(o => (o.getAs[String]("term"), o.getAs[String]("type")))
+    enriched.filter(col("documentID") === docId).select("indexing").head()
+      .getSeq[Row](0).map(r => (r.getAs[String]("term"), r.getAs[String]("type"),
+        obj(r.getAs[Row]("midsub")), obj(r.getAs[Row]("sub"))))
+  }
+
+  test("enrich: known mains, term-typed known midsub/sub, converted persons, order") {
+    val enriched = NestedEnrich.enrich(casesModel, mock)
+    assert(entries(enriched, "d4") == Seq(
+      ("war", "term", Some(("Anthony Wayne", "person")), Some(("Nathanael Greene", "person"))),
+      ("Henry Knox", "person", None, None),
+      ("army", "organization", Some(("Knox, Henry", "term")), Some(("Boston", "term"))),
+      ("Boston", "place", Some(("taxes", "term")), None)))
+    assert(entries(enriched, "d5").isEmpty)
+  }
+
+  test("enrich equals the staged-label path and the flat labels, as sets") {
+    val models = Seq(docModel, casesModel,
+      XmlDocs.toDocModel(XmlDocs.read(spark, fixtureFile(twoAuthorsXml))))
+    for (dm <- models) {
+      val enriched = NestedEnrich.enrich(dm, mock)
+      val (known, api) = maps(dm)
+      assert(rowSet(enriched) == rowSet(
+        NestedEnrich.enrich(dm, mock, labels = Some(Classify.labelTable(known, api)))))
+      assert(rowSet(NestedEnrich.labeledTriples(enriched)) == rowSet(labeledOf(dm)))
+    }
   }
 }
