@@ -31,25 +31,11 @@ object PlanDump {
     }
   }
 
-  /** Exchange nodes in `df`'s physical plan (AQE-initial until `df`
-    * itself executes), from the one-line-per-node tree string — each
-    * exchange is ~0.1 s of fixed stage-launch latency in local mode.
-    * ReusedExchange is excluded (it launches no extra stage). The
-    * FormattedMode explain is not used: it lists every node twice, in
-    * the tree and again as a detail header. None if planning fails.
-    */
-  def countExchanges(df: DataFrame): Option[Int] =
-    try {
-      val t = df.queryExecution.executedPlan.treeString(
-        verbose = false, addSuffix = false)
-      Some(t.split('\n').count(l =>
-        l.contains("Exchange") && !l.contains("ReusedExchange")))
-    } catch { case _: Throwable => None }
-
   private def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
 
-  /** Time and dump each of `names`; returns the names that failed
-    * (including names missing from `queries`).
+  /** Time and dump each of `names`, with the stages the second
+    * execution ran; returns the names that failed (including names
+    * missing from `queries`).
     */
   def run(
       spark: SparkSession,
@@ -59,6 +45,7 @@ object PlanDump {
       names: Seq[String],
       queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(planDir))
+    val metrics = QueryMetrics.attach(spark)
     def dumped(name: String): Boolean =
       try {
         val t0 = System.nanoTime()
@@ -71,19 +58,22 @@ object PlanDump {
         val t2 = System.nanoTime()
         val n = df.count()
         val tExec1 = ms(t2)
+        val before = metrics.snapshot(spark)
         val t3 = System.nanoTime()
         df.count()
         val tExec2 = ms(t3)
+        val stages = (metrics.snapshot(spark) - before).stages
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$planDir/${name}_$suffix.txt"),
           plan.getBytes("UTF-8"))
         println(s"[plandump] $name rows=$n build=${tBuild}ms plan=${tPlan}ms " +
-          s"exec1=${tExec1}ms exec2=${tExec2}ms exchanges=${countExchanges(df).getOrElse(-1)}")
+          s"exec1=${tExec1}ms exec2=${tExec2}ms stages=$stages")
         true
       } catch { case t: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${t.getMessage}")
         false
       }
-    names.filterNot(dumped)
+    try names.filterNot(dumped)
+    finally spark.sparkContext.removeSparkListener(metrics)
   }
 }

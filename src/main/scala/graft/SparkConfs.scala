@@ -31,6 +31,11 @@ object SparkConfs {
     anchored.getOrElse(new java.io.File("target").getAbsolutePath)
   }
 
+  /** The data root, laid out as `<root>/sf<scale>`: Bench's default
+    * scale directory and [[SparkEntry.entry]]'s smoke input.
+    */
+  val dataRoot: String = "/root/testdata"
+
   /** Task threads for local sessions: `SPARK_GRAFT_CPUS`, else every
     * core the JVM sees.
     */

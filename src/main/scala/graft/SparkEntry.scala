@@ -33,12 +33,12 @@ object SparkEntry {
 
   private lazy val defs: Seq[QDef] = groups.flatten
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+  /** Flagship query on the sf0.001 data; its smoke check expects rows > 0.
     * The full reference pipeline in one lazy plan: corpus -> known
     * entities -> classify -> precedence -> URIs -> graph node counts.
     */
   def entry(spark: SparkSession): DataFrame =
-    queries("pipeline_node_counts")(spark, "/root/testdata/sf0.001")
+    queries("pipeline_node_counts")(spark, s"${SparkConfs.dataRoot}/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

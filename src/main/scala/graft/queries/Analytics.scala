@@ -1040,9 +1040,10 @@ object Analytics {
         // Per-round localCheckpoint makes the result plan a LogicalRDD
         // whose hash is not JVM-stable, hence the declarative edge
         // seed as the cross-JVM artifact key.
+        // ewd is requested outside the build, so a cache hit stages it too.
+        val ewd = lpaEdgesByDst(s, dir)
         val la = graft.pipeline.Staged.diskKeyed(s, dir, "lpa_semisync3")(
           ew.select(col("src"), col("dst"))) {
-          val ewd = lpaEdgesByDst(s, dir)
           val supp = col("node_id") >= 1000000L
           var labels = ew.select(col("src").as("node_id")).distinct()
             .withColumn("lbl", col("node_id"))

@@ -2674,16 +2674,24 @@ object Similarity {
     * audit consume — unstaged, the whole walk executed twice.
     * diskKeyed on the declarative seed-edge plan (the walk's result
     * plan is an unstable LogicalRDD) with every routing knob folded
-    * into the tag.
+    * into the tag. The adjacencies are requested before the lookup, so
+    * a cache hit stages the same tags as a miss.
     */
-  private def graphRoutedTop3(s: SparkSession, dir: String): DataFrame =
+  private def graphRoutedTop3(s: SparkSession, dir: String): DataFrame = {
+    val adj = nswAdjacency(s, dir)
+    val layers = NswLayerMods.reverse.map(m => nswLayerAdjacency(s, dir, m))
     graft.pipeline.Staged.diskKeyed(s, dir,
         s"nsw_routed_b${NswBeam}h${NswHops}e${NswEntryPoints}" +
           s"k${NswDescentKeepTop}_${NswDescentKeep}dh$NswDescentHops" +
           s"ls${NswLayerSeeds}lr$NswLayerRounds")(
-        nswSeedEdges(s, dir))(graphRoutedTop3Walk(s, dir))
+        nswSeedEdges(s, dir))(graphRoutedTop3Walk(s, dir, adj, layers))
+  }
 
-  private def graphRoutedTop3Walk(s: SparkSession, dir: String): DataFrame = {
+  /** The walk over the layer-0 adjacency `adj` and the upper-layer
+    * adjacencies `layers`, top layer first.
+    */
+  private def graphRoutedTop3Walk(s: SparkSession, dir: String,
+      adj: DataFrame, layers: Seq[DataFrame]): DataFrame = {
     val e = vecs(s, dir)
     // Bounded-degree navigable graph via NN-DESCENT — never all-pairs:
     // the start graph is one deterministic ring edge (the long-range
@@ -2707,7 +2715,6 @@ object Similarity {
     // LogicalRDD, so the cross-JVM artifact is keyed by the declarative
     // seed-edge plan (NswSeeds is baked into it) with the round count
     // and degree folded into the tag.
-    val adj = nswAdjacency(s, dir)
     val q = e.filter(col("vec_id") < QueryVecs)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qnrm"))
@@ -2733,8 +2740,7 @@ object Similarity {
         .reduce(_ || _))
       .select("vec_id")
     var beam = q.select("q_id").crossJoin(broadcast(entry))
-    for ((adjU, li) <- NswLayerMods.reverse
-        .map(m => nswLayerAdjacency(s, dir, m)).zipWithIndex) {
+    for ((adjU, li) <- layers.zipWithIndex) {
       val keep = if (li == 0) NswDescentKeepTop else NswDescentKeep
       for (_ <- 1 to NswDescentHops) {
         val fr = beam.union(

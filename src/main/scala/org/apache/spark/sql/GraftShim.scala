@@ -29,6 +29,13 @@ object GraftShim {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until the listener bus has delivered every event posted so
+    * far (throws a TimeoutException after 10 s), so a listener's
+    * counters cover the jobs that have returned.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register an expression builder in an EXISTING session's function
     * registry (idempotent). `GraftExtensions` is the front door for
     * sessions built with `spark.sql.extensions`; this path serves

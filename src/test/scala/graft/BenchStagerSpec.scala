@@ -40,4 +40,30 @@ class BenchStagerSpec extends AnyFunSuite {
     Staged.clear(s"${System.identityHashCode(s)}|")
     assert(Staged.requested(s, sf).isEmpty)
   }
+
+  test("an empty and a warm stage cache derive the same stagers") {
+    // A diskKeyed hit skips its build, so a build that requested a
+    // staged tag its key does not would leave that tag to a later
+    // query on a warm cache (the nested nsw_* adjacencies here).
+    val names = Seq("sim_recall_graph_route", "sim_hnsw_layer_stats", "graph_kcore_mutual_knn")
+    val root = java.nio.file.Files.createTempDirectory("stager-cache").toString
+    val prev = sys.props.get("graft.stagecache.dir")
+    sys.props("graft.stagecache.dir") = root
+    try {
+      val cold = stagers(names)
+      assert(cold.nonEmpty)
+      assert(stagers(names) == cold)
+      // On the warm cache, once the stagers ran, no query looks a
+      // generation up: every staged tag is already in the memo.
+      val s = spark.newSession()
+      cold.foreach(n => SparkEntry.queries(n)(s, sf).count())
+      val looked = Staged.diskCacheStats
+      names.foreach(n => SparkEntry.queries(n)(s, sf).count())
+      assert(Staged.diskCacheStats == looked)
+      Staged.clear(s"${System.identityHashCode(s)}|")
+    } finally prev match {
+      case Some(v) => sys.props("graft.stagecache.dir") = v
+      case None => sys.props -= "graft.stagecache.dir"
+    }
+  }
 }

@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    gets the same shared settings;
   *  - no string literal starts with the checkout's absolute path —
   *    paths under it derive from `SparkConfs.targetDir`;
+  *  - no string literal outside `SparkConfs.scala` holds the data root —
+  *    data paths derive from `SparkConfs.dataRoot`;
   *  - the environment is read only by literal name, and only the
   *    [[Kept]] names. A new knob must be a constant unless two callers
   *    need different values, and then it is added here in review;
@@ -43,6 +45,8 @@ class HarnessLintSpec extends AnyFunSuite {
     """(?:\bsys\.env|\bSystem\.getenv)(?:\.(?:get|getOrElse|contains|apply))?\(\s*"([^"]*)"""".r
   /** `"` followed by the checkout's absolute path. */
   private val RepoRoot = "\"" + new java.io.File(SparkConfs.targetDir).getParent
+  /** A string literal holding the data root. */
+  private val DataRootRe = ("\"[^\"]*" + java.util.regex.Pattern.quote(SparkConfs.dataRoot)).r
 
   /** (violations, environment names read) for one file's text. */
   private[graft] def scan(baseName: String, content: String): (Seq[String], Set[String]) = {
@@ -56,6 +60,8 @@ class HarnessLintSpec extends AnyFunSuite {
           (if (baseName != "SparkConfs.scala" && BuilderRe.findFirstIn(l).nonEmpty)
             Seq(s"$at: SparkSession.builder outside SparkConfs") else Nil) ++
           (if (l.contains(RepoRoot)) Seq(s"$at: repo-root string literal") else Nil) ++
+          (if (baseName != "SparkConfs.scala" && DataRootRe.findFirstIn(l).nonEmpty)
+            Seq(s"$at: data-root string literal") else Nil) ++
           (if (EnvRefRe.findAllMatchIn(l).size > names.size)
             Seq(s"$at: environment read without a literal name") else Nil) ++
           names.filterNot(Kept).map(n => s"$at: environment name $n")
@@ -172,15 +178,19 @@ class HarnessLintSpec extends AnyFunSuite {
         |  val k = sys.env.getOrElse("SPARK_GRAFT_NEW_KNOB", "1")
         |  def env(k: String) = sys.env.get(k)
         |  val c = sys.env.get("SPARK_GRAFT_CPUS")
+        |  val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "${SparkConfs.dataRoot}/sf0.1")
+        |  val e = s"$${SparkConfs.dataRoot}/sf0.001"
         |}""".stripMargin
     val (bad, names) = scan("Evil.scala", planted)
     assert(bad == Seq(
       "Evil.scala:3: SparkSession.builder outside SparkConfs",
       "Evil.scala:4: repo-root string literal",
       "Evil.scala:5: environment name SPARK_GRAFT_NEW_KNOB",
-      "Evil.scala:6: environment read without a literal name"))
-    assert(names == Set("SPARK_GRAFT_NEW_KNOB", "SPARK_GRAFT_CPUS"))
+      "Evil.scala:6: environment read without a literal name",
+      "Evil.scala:8: data-root string literal"))
+    assert(names == Set("SPARK_GRAFT_NEW_KNOB", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR"))
     assert(scan("SparkConfs.scala", "  SparkSession.builder().appName(app)")._1.isEmpty)
+    assert(scan("SparkConfs.scala", s"""  val dataRoot: String = "${SparkConfs.dataRoot}"""")._1.isEmpty)
   }
 
   test("main code: one generation store holds the _SUCCESS probe and the 24 h grace") {

@@ -22,48 +22,26 @@ import sys
 
 MIN_ORACLE_S = 0.25
 
-# Staging read-back of the hit-only stage cache (58 artifacts, pure
-# parquet reads, zero recompute) is the cleanest code-free environment
-# probe the harness records: the same bytes read every run, so its
-# wall time tracks only the box's mode. Thresholds fit the committed
-# hit-only records (r13 29.8 s / r15-fast 28.5 s vs r15-slow 52.2 s vs
-# the r15 driver record's 91.4 s). Only valid when misses == 0 —
-# a miss means staging includes recompute and says nothing about the
-# environment. The bands were fitted on records from Bench's old
-# hand-kept stager set; the derived stagers pre-build more tags, so
-# staging_sec reads higher on the same box until they are refitted.
-STAGING_FAST_MAX_S = 35.0
-STAGING_SLOW_MAX_S = 65.0
-
-# Local-mode floor arithmetic (the BENCH_RATIO floor-note numbers, made
-# mechanical in r18): ~0.1 s of fixed stage-launch latency per exchange
-# plus ~0.3 s of scan + driver overhead. Calibrated against the audited
-# floor rows (text_rake_keywords: 3 exchanges, 0.60 s steady-state ≈
-# 0.30 + 3×0.10). A flagged row within FLOOR_TOLERANCE of its implied
-# floor is classified floor-bound, with the arithmetic shown in its row.
+# Local-mode floor arithmetic: fixed stage-launch latency per stage
+# plus ~0.3 s of scan + driver overhead, with the stage count each query
+# ran in the bench's timed loop (its sidecar `metrics`). Fitted on the
+# audited floor row text_rake_keywords (4 stages measured at sf0.01
+# and sf0.1, 0.60 s steady state = 0.30 + 4 x 0.075; the same row read
+# 3 exchanges x 0.10 s under the exchange-count floor this replaced).
+# A flagged row within FLOOR_TOLERANCE of its implied floor is
+# classified floor-bound, with the arithmetic shown in its row.
 FLOOR_BASE_S = 0.30
-FLOOR_PER_EXCH_S = 0.10
+FLOOR_PER_STAGE_S = 0.075
 FLOOR_TOLERANCE = 1.5
 
 
-def classify_mode(staging_sec, cache, stream_staging=None):
-    """Mechanical band-mode classification from the staging probe."""
-    if not cache or cache.get("misses", 1) != 0 or staging_sec is None:
-        return "unclassifiable (staging includes recompute)"
-    # From r17 the bench pre-generates stream staged inputs and charges
-    # the write jobs to prestage_sec (NOT staging_sec, which stays the
-    # historical probe). stream_staging.misses counts only POST-prestage
-    # generation writes — a tree invalidated mid-run whose write some
-    # timed query absorbed, which poisons that query's number the same
-    # way a pipeline-cache miss poisons staging. Absent field = pre-r17
-    # record, judged by the pipeline cache alone.
-    if stream_staging is not None and stream_staging.get("misses", 0) != 0:
-        return "unclassifiable (a timed query absorbed stream staging)"
-    if staging_sec < STAGING_FAST_MAX_S:
-        return "fast mode"
-    if staging_sec < STAGING_SLOW_MAX_S:
-        return "slow mode"
-    return "deep-slow mode"
+def cpu_note(record):
+    """The record's executor CPU share (task CPU over task run time in
+    the timed loop); a share well below its idle-box value means the
+    task threads waited for cores."""
+    share = record.get("cpu_share")
+    return ("no CPU share recorded" if share is None
+            else f"executor CPU share {share:.2f}")
 
 
 def carried_notes(out_md):
@@ -133,47 +111,14 @@ def median(xs):
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
 
 
-def canary_note(record, bench):
-    """Query-side classification of a driver record from its canary
-    pairs (r18 directive #2): the staging probe classifies only the
-    ENVIRONMENT, so a fast-probe record can still carry query-side
-    inflation (the r17 record: fast staging, 2.2x-median total, six
-    spikes 11-43x that each cost a worktree A/B). The canaries are
-    fixed work re-run at the begin and end of the timed loop;
-    record-begin vs the committed table's begin medians = query-side
-    inflation of that run, end vs begin = drift DURING the run. A
-    record whose canaries sit in band makes any concentrated spike
-    code-attributable; out-of-band canaries classify the spikes as
-    environment without an A/B.
-    """
-    rec = record.get("canary_sec") or {}
-    base = (bench or {}).get("canary_sec") or {}
-    rb, bb = rec.get("begin") or {}, base.get("begin") or {}
-    shared = sorted(set(rb) & set(bb))
-    if not shared:
-        return ""
-    infl = median([rb[n] / max(bb[n], 1e-3) for n in shared])
-    parts = [f" Canaries: query-side {infl:.2f}x this table's begin "
-             f"medians ({', '.join(f'{n} {rb[n]:.2f}/{bb[n]:.2f}s' for n in shared)})"]
-    re_ = rec.get("end") or {}
-    drift_shared = sorted(set(rb) & set(re_))
-    if drift_shared:
-        drift = median([re_[n] / max(rb[n], 1e-3) for n in drift_shared])
-        parts.append(f"; end/begin drift {drift:.2f}x within the record")
-    parts.append(" — spikes beyond this band are code-attributable, "
-                 "within it are environment.")
-    return "".join(parts)
-
-
 def merge_medians(benches):
     """Fold several full-run sidecars into one synthetic bench record of
     per-query MEDIANS (directive r16→r17 #3): one unlucky draw in one
     run no longer sets flag membership — the committed table becomes a
     property of the round's runs, not of whichever single run was
     picked. Every input must cover the same query set (full runs only;
-    a subset run would silently median over different populations) and
-    should be fast-probe classified — the caller picks the runs, this
-    records how many went in.
+    a subset run would silently median over different populations) —
+    the caller picks the runs, this records how many went in.
     """
     names = set(benches[0].get("queries", {}))
     for b in benches[1:]:
@@ -189,10 +134,6 @@ def merge_medians(benches):
                          " — pass sidecars from one scale only")
     queries = {n: round(median([b["queries"][n] for b in benches]), 3)
                for n in names}
-    worst_misses = max((b.get("staging_cache") or {}).get("misses", 1)
-                       for b in benches)
-    hits = min((b.get("staging_cache") or {}).get("hits", 0)
-               for b in benches)
     merged = {
         # The headline equals the SUM of the per-query medians the table
         # prints (r18, per ADVICE) — a median of run totals is a number
@@ -201,32 +142,20 @@ def merge_medians(benches):
         "value": round(sum(queries.values()), 3),
         "staging_sec": round(median([b.get("staging_sec", 0)
                                      for b in benches]), 3),
-        "staging_cache": {"hits": hits, "misses": worst_misses},
         "queries": queries,
         "sf": benches[0].get("sf", "?"),
         "n_runs": len(benches),
     }
-    streams = [b.get("stream_staging") for b in benches]
-    if all(s is not None for s in streams):
-        merged["stream_staging"] = {
-            "hits": min(s.get("hits", 0) for s in streams),
-            "misses": max(s.get("misses", 1) for s in streams)}
-    # Canary medians (r18): per-name medians over the runs that carry
-    # them, begin and end separately — the committed baseline a driver
-    # record's canary_sec is compared against.
-    cans = [b.get("canary_sec") for b in benches if b.get("canary_sec")]
-    if cans:
-        merged["canary_sec"] = {
-            side: {n: round(median([c[side][n] for c in cans
-                                    if n in c.get(side, {})]), 3)
-                   for n in {k for c in cans for k in c.get(side, {})}}
-            for side in ("begin", "end")}
-    # Exchange counts are plan-derived and deterministic — take the
-    # first run that has them. Flavor counts: worst (max) per tag.
-    for b in benches:
-        if b.get("exchanges"):
-            merged["exchanges"] = b["exchanges"]
-            break
+    shares = [b["cpu_share"] for b in benches if "cpu_share" in b]
+    if shares:
+        merged["cpu_share"] = round(median(shares), 3)
+    # Per-query stage counts: the median over the runs that measured it.
+    metrics = [b["metrics"] for b in benches if b.get("metrics")]
+    if metrics:
+        merged["metrics"] = {
+            n: {"stages": median([m[n]["stages"] for m in metrics if n in m])}
+            for n in {k for m in metrics for k in m}}
+    # Flavor counts: worst (max) per tag.
     flav = [b.get("staged_flavors") for b in benches
             if b.get("staged_flavors")]
     if flav:
@@ -260,18 +189,15 @@ def main():
     d_tot = sum(r[2] for r in rows)
     substantive = [r for r in rows if r[2] >= MIN_ORACLE_S]
     over2x = [r for r in substantive if r[3] > 2.0]
-    # Floor split (r18 directive): each exchange costs ~FLOOR_PER_EXCH_S
-    # of fixed stage-launch latency in local mode, plus scan/driver
-    # overhead — the BENCH_RATIO floor-note arithmetic, now mechanical.
-    # A >2x row whose Spark median sits within FLOOR_TOLERANCE of that
-    # implied floor is labeled "floor-bound" (measurement resolution,
-    # not a plan defect — the verdict accepts these when the plan shape
-    # is right) instead of silently suppressed; rows without exchange
-    # telemetry (pre-r18 sidecars) stay plain-flagged.
-    exch = bench.get("exchanges") or {}
+    # Floor split: a >2x row whose Spark median sits within
+    # FLOOR_TOLERANCE of its implied stage floor is labeled
+    # "floor-bound" (measurement resolution, not a plan defect) instead
+    # of silently suppressed; rows without measured stages (sidecars
+    # from before the metrics) stay plain-flagged.
+    stages = {n: m["stages"] for n, m in (bench.get("metrics") or {}).items()}
     def implied_floor(name):
-        e = exch.get(name)
-        return None if e is None else FLOOR_BASE_S + FLOOR_PER_EXCH_S * e
+        e = stages.get(name)
+        return None if e is None else FLOOR_BASE_S + FLOOR_PER_STAGE_S * e
     def is_floor_bound(r):
         fl = implied_floor(r[0])
         return fl is not None and r[1] <= FLOOR_TOLERANCE * fl
@@ -308,7 +234,7 @@ def main():
            if bench.get("n_runs") else "the ")
         + f"{bench.get('value', s_tot):.1f} s"
         + (")" if bench.get("n_runs") else " run")
-        + f" ({classify_mode(bench.get('staging_sec'), bench.get('staging_cache'), bench.get('stream_staging'))}, "
+        + f" ({cpu_note(bench)}, "
         f"staging {bench.get('staging_sec', 0):.1f} s) with "
         f"{len(flagged)} substantive >2x flags and "
         f"{len(floor_bound)} floor-bound rows"
@@ -326,12 +252,7 @@ def main():
         # oracle-shared queries, so it would overstate the factor
         # whenever any query lacks an SQL oracle (subset bias).
         f"{driver[1]['value'] / max(bench.get('value', s_tot), 1e-3):.2f}x "
-        f"this table's run; staging probe classifies it as "
-        f"**{classify_mode(driver[1].get('staging_sec'), driver[1].get('staging_cache'), driver[1].get('stream_staging'))}** "
-        f"(thresholds: < {STAGING_FAST_MAX_S:.0f} s fast, "
-        f"< {STAGING_SLOW_MAX_S:.0f} s slow, else deep-slow; hit-only "
-        f"cache required — see the band table above)."
-        + canary_note(driver[1], bench),
+        f"this table's run ({cpu_note(driver[1])}).",
         "",
     ] if driver else []) + [
         "Sub-second oracle rows are dominated by Spark's fixed local-mode "
@@ -349,15 +270,15 @@ def main():
         "implied local stage floor)",
         "",
         f"Floor = {FLOOR_BASE_S} s scan/driver overhead + "
-        f"{FLOOR_PER_EXCH_S} s per exchange (stage launch); exchange "
-        "counts are plan-derived per query by `graft.Bench`. These rows "
-        "are measurement resolution, not plan defects — each plan was "
-        "audited scale-right and has no exchange left to remove without "
+        f"{FLOOR_PER_STAGE_S} s per stage (stage launch); stage counts "
+        "are measured per query by `graft.Bench`. These rows are "
+        "measurement resolution, not plan defects — each plan was "
+        "audited scale-right and has no stage left to remove without "
         "hollowing the query into a staged read-back.",
         "",
-        "| query | spark s | duckdb s | ratio | exchanges | floor s |",
+        "| query | spark s | duckdb s | ratio | stages | floor s |",
         "|---|---|---|---|---|---|",
-    ] + [f"| {n} | {s:.2f} | {d:.3f} | {r:.1f} | {exch.get(n)} | "
+    ] + [f"| {n} | {s:.2f} | {d:.3f} | {r:.1f} | {stages.get(n)} | "
          f"{implied_floor(n):.2f} |" for n, s, d, r in floor_bound] + [
         "",
         "## Largest oracles (top 40 by DuckDB seconds)",
